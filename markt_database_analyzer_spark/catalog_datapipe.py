@@ -15,20 +15,12 @@ from pyspark.storagelevel import StorageLevel
 from .catalog import SQL_DAVG, SQL_DSUM, register, _t
 from .datapipe import text as tx
 from .functions import davg, dsum
-from .catalog import SQL_DSUM, register, _t
-from .functions import dsum
-from pyspark.sql import DataFrame, SparkSession
 from .datapipe.hashing import hash60, sql_hash60
 import tempfile
-from .functions import davg
 from .datapipe import clustering as cl
-from .catalog import SQL_DAVG, register, _t
-from .functions.aggregates import davg
 from .datapipe import dedup as dd
-from .catalog import register, _t
 from .datapipe import similarity as sim
 from .datapipe.util import fan_out
-from .catalog import SQL_DAVG, _t, register
 from .catalog_text import _FUZZY_SN_WINDOW, fuzzy_block_candidates
 
 

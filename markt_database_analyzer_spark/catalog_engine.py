@@ -9,25 +9,15 @@ entry docstrings.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from .catalog import SQL_DAVG, SQL_DSUM, register, _t
 from .functions import davg, dsum
-from .catalog import SQL_DSUM, register, _t
-from .functions import dsum
 from .operators.scd import scd2_versions
-from pyspark.sql import DataFrame, SparkSession
 from .datapipe.hashing import hash60, sql_hash60
-from pyspark.sql import Column, DataFrame, SparkSession, Window
-from .catalog import register, _t
 import pandas as pd  # noqa: F401  (resolves postponed UDF type hints)
-from .catalog import SQL_DAVG, register, _t
-from .functions.aggregates import davg
 from .datapipe import dedup as dd
 from .operators.asof import asof_join_last
-from .datapipe.hashing import sql_hash60
-from .catalog import SQL_DAVG, _t, register
-from .functions import davg
 
 
 @register(

@@ -13,10 +13,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from .catalog import demo_guard, register, _t
+from .catalog import SQL_DAVG, SQL_DSUM, demo_guard, register, _t
 from .datapipe import text as tx
-from .functions import dsum
-from .catalog import SQL_DAVG, SQL_DSUM, register, _t
 from .functions import davg, dsum
 from .operators.equidepth import (
     bucket_by_cuts,
@@ -27,10 +25,7 @@ from .operators.equidepth import (
     value_counts_cum,
     values_at_ranks,
 )
-from .catalog import SQL_DSUM, register, _t
-from .operators.equidepth import value_counts_cum
-from pyspark.sql import DataFrame, SparkSession
-from .catalog_stats import _CAL_BINS, _LR_STOP, _sql_naive_bayes, classify_naive_bayes_langid
+from .catalog_stats import _CAL_BINS, _sql_naive_bayes, classify_naive_bayes_langid
 from .catalog_text import _BM25_B, _BM25_K1, _BM25_TERMS, _SQL_TOKENS, _tokens
 
 
@@ -101,15 +96,13 @@ def events_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-_ROC_STOPWORDS = "('the', 'a', 'of', 'and', 'is')"
 def _sql_roc() -> str:
     toks = tx.sql_tokens("text")
     return f"""
 WITH scored AS (
   SELECT doc_id,
          CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label,
-         round(len(list_filter({toks}, t -> t IN {_ROC_STOPWORDS}))
-                 / CAST(len({toks}) AS DOUBLE), 9) AS score
+         round({tx.sql_stopword_ratio(toks)}, 9) AS score
   FROM documents
 ),
 by_score AS (
@@ -154,10 +147,9 @@ def eval_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets scores to a fixed grid first."""
     docs = _t(spark, sf_dir, "documents")
     ts = tx.tokens("text")
-    stop = F.filter(ts, lambda t: t.isin("the", "a", "of", "and", "is"))
     scored = docs.select(
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("label"),
-        F.round(F.size(stop) / F.size(ts).cast("double"), 9).alias("score"),
+        F.round(tx.stopword_ratio(ts), 9).alias("score"),
     )
     by_score = scored.groupBy("score").agg(
         F.sum("label").alias("tp_here"),
@@ -351,8 +343,7 @@ def _sql_calibration_cuts() -> str:
 WITH scored AS (
   SELECT doc_id,
          CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-         round(len(list_filter({toks}, t -> t IN {_LR_STOP}))
-                 / CAST(len({toks}) AS DOUBLE), 9) AS conf
+         round({tx.sql_stopword_ratio(toks)}, 9) AS conf
   FROM documents
 ),
 {sql_cuts_ctes("scored", "conf", _CAL_BINS)},
@@ -396,11 +387,10 @@ def eval_calibration_bins_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     remain exactly replayable."""
     docs = _t(spark, sf_dir, "documents")
     ts = tx.tokens("text")
-    stop = F.filter(ts, lambda t: t.isin("the", "a", "of", "and", "is"))
     scored = docs.select(
         "doc_id",
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
-        F.round(F.size(stop) / F.size(ts).cast("double"), 9).alias("conf"),
+        F.round(tx.stopword_ratio(ts), 9).alias("conf"),
     ).localCheckpoint(eager=True)  # feeds the cut derivation AND the binning
     cuts = equi_depth_cut_points(scored, F.col("conf"), _CAL_BINS)
     binned = scored.withColumn("bin", bucket_by_cuts(F.col("conf"), cuts))
@@ -562,14 +552,12 @@ def eval_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PR_STOPWORDS = "('the', 'a', 'of', 'and', 'is')"
 def _sql_pr_auc() -> str:
     toks = tx.sql_tokens("text")
     return f"""
 WITH scored AS (
   SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label,
-         round(len(list_filter({toks}, t -> t IN {_PR_STOPWORDS}))
-                 / CAST(len({toks}) AS DOUBLE), 9) AS score
+         round({tx.sql_stopword_ratio(toks)}, 9) AS score
   FROM documents
 ),
 by_score AS (
@@ -620,10 +608,9 @@ def eval_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the domain is bounded by the grid, not the corpus)."""
     docs = _t(spark, sf_dir, "documents")
     ts = tx.tokens("text")
-    stop = F.filter(ts, lambda t: t.isin("the", "a", "of", "and", "is"))
     scored = docs.select(
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("label"),
-        F.round(F.size(stop) / F.size(ts).cast("double"), 9).alias("score"),
+        F.round(tx.stopword_ratio(ts), 9).alias("score"),
     )
     by_score = scored.groupBy("score").agg(
         F.sum("label").alias("tp_here"),
@@ -771,7 +758,6 @@ def eval_mrr_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KAPPA_STOPWORDS = "('the', 'a', 'of', 'and', 'is')"
 _KAPPA_THRESHOLD = 0.08
 def _sql_kappa() -> str:
     toks = tx.sql_tokens("text")
@@ -779,8 +765,7 @@ def _sql_kappa() -> str:
 WITH scored AS (
   SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS truth,
          CASE WHEN (CASE WHEN len({toks}) = 0 THEN 0.0
-                         ELSE round(len(list_filter({toks}, t -> t IN {_KAPPA_STOPWORDS}))
-                                    / CAST(len({toks}) AS DOUBLE), 9)
+                         ELSE round({tx.sql_stopword_ratio(toks)}, 9)
                     END) >= {_KAPPA_THRESHOLD}
               THEN 1 ELSE 0 END AS pred
   FROM documents
@@ -825,12 +810,11 @@ def eval_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     one scan, one 4-cell combine."""
     docs = _t(spark, sf_dir, "documents")
     base = docs.select("lang", tx.tokens("text").alias("toks"))
-    stop = F.filter(F.col("toks"), lambda t: t.isin("the", "a", "of", "and", "is"))
     scored = base.select(
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("truth"),
         (
             F.when(F.size("toks") == 0, F.lit(0.0)).otherwise(
-                F.round(F.size(stop) / F.size("toks").cast("double"), 9)
+                F.round(tx.stopword_ratio(F.col("toks")), 9)
             )
             >= _KAPPA_THRESHOLD
         ).cast("int").alias("pred"),
@@ -868,14 +852,12 @@ def eval_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LIFT_STOPWORDS = "('the', 'a', 'of', 'and', 'is')"
 def _sql_lift() -> str:
     toks = tx.sql_tokens("text")
     return f"""
 WITH scored AS (
   SELECT doc_id, CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label,
-         round(len(list_filter({toks}, t -> t IN {_LIFT_STOPWORDS}))
-                 / CAST(len({toks}) AS DOUBLE), 9) AS score
+         round({tx.sql_stopword_ratio(toks)}, 9) AS score
   FROM documents
 ),
 dec AS (
@@ -923,11 +905,10 @@ def eval_lift_gains_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "eval_lift_gains_deciles_cuts",
     )
     base = docs.select("doc_id", "lang", tx.tokens("text").alias("toks"))
-    stop = F.filter(F.col("toks"), lambda t: t.isin("the", "a", "of", "and", "is"))
     scored = base.select(
         "doc_id",
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("label"),
-        F.round(F.size(stop) / F.size("toks").cast("double"), 9).alias("score"),
+        F.round(tx.stopword_ratio(F.col("toks")), 9).alias("score"),
     )
     dec = scored.select(
         "label",
@@ -961,14 +942,12 @@ def eval_lift_gains_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("decile")
 
 
-_BRIER_STOPWORDS = "('the', 'a', 'of', 'and', 'is')"
 def _sql_brier() -> str:
     toks = tx.sql_tokens("text")
     return f"""
 WITH scored AS (
   SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label,
-         round(len(list_filter({toks}, t -> t IN {_BRIER_STOPWORDS}))
-                 / CAST(len({toks}) AS DOUBLE), 9) AS score
+         round({tx.sql_stopword_ratio(toks)}, 9) AS score
   FROM documents
 ),
 agg AS (
@@ -1009,10 +988,9 @@ def eval_brier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB this is a single scan with a 3-number combine."""
     docs = _t(spark, sf_dir, "documents")
     base = docs.select("lang", tx.tokens("text").alias("toks"))
-    stop = F.filter(F.col("toks"), lambda t: t.isin("the", "a", "of", "and", "is"))
     scored = base.select(
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("label"),
-        F.round(F.size(stop) / F.size("toks").cast("double"), 9).alias("score"),
+        F.round(tx.stopword_ratio(F.col("toks")), 9).alias("score"),
     )
     term = F.round(
         F.lit(1000000000.0)
@@ -1224,14 +1202,12 @@ def eval_rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_F1_STOPWORDS = "('the', 'a', 'of', 'and', 'is')"  # the ROC/kappa fixture
 def _sql_f1_sweep() -> str:
     toks = tx.sql_tokens("text")
     return f"""
 WITH scored AS (
   SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-         round(len(list_filter({toks}, t -> t IN {_F1_STOPWORDS}))
-                 / CAST(len({toks}) AS DOUBLE), 9) AS v
+         round({tx.sql_stopword_ratio(toks)}, 9) AS v
   FROM documents
 ),
 dom AS (
@@ -1290,10 +1266,9 @@ def eval_f1_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     only."""
     docs = _t(spark, sf_dir, "documents")
     ts = tx.tokens("text")
-    stop = F.filter(ts, lambda t: t.isin("the", "a", "of", "and", "is"))
     scored = docs.select(
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
-        F.round(F.size(stop) / F.size(ts).cast("double"), 9).alias("v"),
+        F.round(tx.stopword_ratio(ts), 9).alias("v"),
     ).localCheckpoint(eager=True)  # feeds both prefix sums
     cnt_cum, _ = value_counts_cum(scored, F.col("v"))
     pos_cum, _ = value_counts_cum(scored, F.col("v"), weight=F.col("y"))
@@ -1346,8 +1321,7 @@ def _sql_ece() -> str:
     return f"""
 WITH scored AS (
   SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label,
-         CAST(round(len(list_filter({toks}, t -> t IN ('the','a','of','and','is')))
-                      / CAST(len({toks}) AS DOUBLE) * 1e9)
+         CAST(round({tx.sql_stopword_ratio(toks)} * 1e9)
               AS BIGINT) AS s9
   FROM documents
   WHERE len({toks}) > 0
@@ -1396,10 +1370,9 @@ def eval_expected_calibration_error(spark: SparkSession, sf_dir: str) -> DataFra
     base = docs.select("lang", tx.tokens("text").alias("toks")).filter(
         F.size("toks") > 0
     )
-    stop = F.filter(F.col("toks"), lambda t: t.isin("the", "a", "of", "and", "is"))
     scored = base.select(
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("label"),
-        F.round(F.size(stop) / F.size("toks").cast("double") * 1e9, 0)
+        F.round(tx.stopword_ratio(F.col("toks")) * 1e9, 0)
         .cast("bigint")
         .alias("s9"),
     )
@@ -1551,8 +1524,7 @@ WITH rated AS (
           + CASE WHEN n_chars >= 800 THEN 1 ELSE 0 END) AS rb
   FROM (
     SELECT n_chars,
-           CAST(round(len(list_filter({toks}, t -> t IN ('the','a','of','and','is')))
-                        / CAST(len({toks}) AS DOUBLE) * 1e9)
+           CAST(round({tx.sql_stopword_ratio(toks)} * 1e9)
                 AS BIGINT) AS s9
     FROM documents WHERE len({toks}) > 0
   )
@@ -1608,9 +1580,8 @@ def eval_cohens_kappa_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.select(
         "n_chars", tx.tokens("text").alias("toks")
     ).filter(F.size("toks") > 0)
-    stop = F.filter(F.col("toks"), lambda t: t.isin("the", "a", "of", "and", "is"))
     s9 = (
-        F.round(F.size(stop) / F.size("toks").cast("double") * 1e9, 0)
+        F.round(tx.stopword_ratio(F.col("toks")) * 1e9, 0)
         .cast("bigint")
     )
     grade = lambda c, cuts: sum(  # noqa: E731
@@ -1661,8 +1632,7 @@ def _sql_auc_ci() -> str:
     return f"""
 WITH scored AS (
   SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label,
-         round(len(list_filter({toks}, t -> t IN ('the','a','of','and','is')))
-               / CAST(len({toks}) AS DOUBLE), 9) AS score
+         round({tx.sql_stopword_ratio(toks)}, 9) AS score
   FROM documents WHERE len({toks}) > 0
 ),
 by_score AS (
@@ -1733,10 +1703,9 @@ def eval_auc_hanley_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB form buckets scores to a fixed grid first), 1-row reduce."""
     docs = _t(spark, sf_dir, "documents")
     ts = tx.tokens("text")
-    stop = F.filter(ts, lambda t: t.isin("the", "a", "of", "and", "is"))
     scored = docs.select(
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("label"),
-        F.round(F.size(stop) / F.size(ts).cast("double"), 9).alias("score"),
+        F.round(tx.stopword_ratio(ts), 9).alias("score"),
     ).filter(F.size(ts) > 0)
     by_score = scored.groupBy("score").agg(
         F.sum("label").alias("tp_here"),
@@ -2153,8 +2122,7 @@ WITH rated AS (
   SELECT doc_id,
          CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS r1,
          CASE WHEN (CASE WHEN len({toks}) = 0 THEN 0.0
-                         ELSE round(len(list_filter({toks}, t -> t IN {_KAPPA_STOPWORDS}))
-                                    / CAST(len({toks}) AS DOUBLE), 9)
+                         ELSE round({tx.sql_stopword_ratio(toks)}, 9)
                     END) >= {_KAPPA_THRESHOLD}
               THEN 1 ELSE 0 END AS r2,
          CASE WHEN doc_id % 5 = 0 THEN NULL
@@ -2222,13 +2190,12 @@ def eval_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.select(
         "doc_id", "lang", F.length("text").alias("tlen"), tx.tokens("text").alias("toks")
     )
-    stop = F.filter(F.col("toks"), lambda t: t.isin("the", "a", "of", "and", "is"))
     rated = base.select(
         "doc_id",
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("r1"),
         (
             F.when(F.size("toks") == 0, F.lit(0.0)).otherwise(
-                F.round(F.size(stop) / F.size("toks").cast("double"), 9)
+                F.round(tx.stopword_ratio(F.col("toks")), 9)
             )
             >= _KAPPA_THRESHOLD
         ).cast("int").alias("r2"),

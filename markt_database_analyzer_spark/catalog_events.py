@@ -13,9 +13,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from .catalog import SQL_DAVG, SQL_DSUM, register, _t
 from .functions import dsum
-from .catalog import SQL_DSUM, register, _t
-from pyspark.sql import DataFrame, SparkSession
-from .catalog import register, _t
 
 
 @register(

@@ -11,10 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from .catalog import SQL_DSUM, demo_guard, register, _t
-from .functions import dsum
-from .catalog import register, _t
-from .catalog import SQL_DAVG, SQL_DSUM, register, _t
+from .catalog import SQL_DAVG, SQL_DSUM, demo_guard, register, _t
 from .functions import davg, dsum
 from .operators.equidepth import (
     bucket_by_cuts,
@@ -24,15 +21,6 @@ from .operators.equidepth import (
     sql_cuts_ctes,
     value_counts_cum,
     values_at_ranks,
-)
-from .catalog import SQL_DAVG, register, _t
-from .functions import davg
-from pyspark.sql import DataFrame, SparkSession
-from .catalog import SQL_DAVG, _t, register
-from .operators.equidepth import (
-    bucket_by_cuts,
-    equi_depth_cut_points,
-    sql_cuts_ctes,
 )
 
 

@@ -11,14 +11,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from .catalog import register, _t
-from pyspark.sql import DataFrame, SparkSession, Window
 from .catalog import SQL_DAVG, SQL_DSUM, register, _t
 from .datapipe.clustering import triangle_stats
 from .functions import dsum
-from pyspark.sql import DataFrame, SparkSession
-from .catalog import SQL_DAVG, register, _t
-from .catalog import SQL_DAVG, _t, register
 
 
 # Nano-grid deterministic sum: dsum's construction at 1e-9 — needed when

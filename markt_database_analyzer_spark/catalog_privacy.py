@@ -9,18 +9,12 @@ entry docstrings.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from .catalog import SQL_DAVG, SQL_DSUM, register, _t
-from pyspark.sql import Column, DataFrame, SparkSession, Window
-from .catalog import register, _t
-from .catalog import SQL_DSUM, register, _t
 from .datapipe.hashing import hash60, sql_hash60
-from pyspark.sql import DataFrame, SparkSession
-from .datapipe.hashing import sql_hash60
 from .datapipe.sampling import RESOLUTION, _gate
 from .operators.equidepth import value_counts_cum
-from .catalog import SQL_DAVG, _t, register
 
 
 _PROFILE_COLS = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")

@@ -14,14 +14,11 @@ from pyspark.sql import functions as F
 from .catalog import SQL_DAVG, SQL_DSUM, demo_guard, register, _t
 from .datapipe import sampling as smp
 from .datapipe import text as tx
-from .catalog import SQL_DSUM, register, _t
 from .functions.zorder import sql_zorder2, zorder2
 from .datapipe.hashing import hash60, sql_hash60
-from .catalog import register, _t
 from .datapipe.sampling import RESOLUTION, _gate, sql_gate
 from .datapipe.util import fan_out
-from .datapipe.similarity import kcenter_select
-from .datapipe.similarity import cosine
+from .datapipe.similarity import cosine, kcenter_select
 from .operators.equidepth import (
     bucket_by_cuts,
     equi_depth_cut_points,
@@ -30,13 +27,6 @@ from .operators.equidepth import (
     sql_cuts_ctes,
     value_counts_cum,
     values_at_ranks,
-)
-from pyspark.sql import DataFrame, SparkSession
-from .catalog import SQL_DAVG, _t, register
-from .operators.equidepth import (
-    bucket_by_cuts,
-    equi_depth_cut_points,
-    sql_cuts_ctes,
 )
 
 

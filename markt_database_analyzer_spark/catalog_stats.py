@@ -9,13 +9,11 @@ entry docstrings.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from .catalog import SQL_DAVG, SQL_DSUM, demo_guard, register, _t
 from .datapipe import text as tx
 from .functions import davg, dsum
-from .catalog import register, _t
-from .catalog import SQL_DSUM, register, _t
 from .datapipe.sketches import (
     BLOOM_K,
     BLOOM_M,
@@ -34,17 +32,11 @@ from .datapipe.sketches import (
     sql_cms_bucket,
     sql_hll,
 )
-from .functions import dsum
-from pyspark.sql import DataFrame, SparkSession
 from .datapipe.hashing import hash60, sql_hash60
-from pyspark.sql import Column, DataFrame, SparkSession, Window
 from .datapipe import clustering as cl
-from .datapipe.sampling import RESOLUTION, _gate, sql_gate
+from .datapipe.sampling import RESOLUTION, sql_gate, train_eval_split, _gate
 from .datapipe.util import fan_out
-from .catalog import SQL_DAVG, register, _t
-from .functions.aggregates import davg
 from .datapipe import dedup as dd
-from .datapipe.sampling import RESOLUTION
 from .operators.equidepth import (
     bucket_by_cuts,
     equi_depth_cut_points,
@@ -54,17 +46,7 @@ from .operators.equidepth import (
     value_counts_cum,
     values_at_ranks,
 )
-from .operators.equidepth import grouped_value_counts_cum
-from .operators.equidepth import value_counts_cum
 import math
-from .datapipe.sampling import RESOLUTION, sql_gate, train_eval_split
-from .catalog import SQL_DAVG, _t, register
-from .functions import davg
-from .operators.equidepth import (
-    bucket_by_cuts,
-    equi_depth_cut_points,
-    sql_cuts_ctes,
-)
 
 
 @register(
@@ -1857,15 +1839,13 @@ def iso_regression_pav(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LR_STEPS = 8
 _LR_LR = 1.0
-_LR_STOP = "('the', 'a', 'of', 'and', 'is')"
 def _sql_logreg() -> str:
     toks = tx.sql_tokens("text")
     feats = f"""
 feats AS (
   SELECT CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y,
          1.0 AS x0,
-         round(len(list_filter({toks}, t -> t IN {_LR_STOP}))
-                 / CAST(len({toks}) AS DOUBLE), 9) AS x1,
+         round({tx.sql_stopword_ratio(toks)}, 9) AS x1,
          round(len(array_to_string({toks}, '')) / CAST(len({toks}) AS DOUBLE), 9) AS x2,
          round(len(list_distinct({toks})) / CAST(len({toks}) AS DOUBLE), 9) AS x3
   FROM documents
@@ -1921,11 +1901,10 @@ def ml_logreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     training accuracy numerator, and mean log-loss — one row."""
     docs = _t(spark, sf_dir, "documents")
     ts = tx.tokens("text")
-    stop = F.filter(ts, lambda t: t.isin("the", "a", "of", "and", "is"))
     nf = F.size(ts).cast("double")
     feats = docs.select(
         F.when(F.col("lang") == "en", 1.0).otherwise(0.0).alias("y"),
-        F.round(F.size(stop) / nf, 9).alias("x1"),
+        F.round(tx.stopword_ratio(ts), 9).alias("x1"),
         F.round(F.length(F.array_join(ts, "")) / nf, 9).alias("x2"),
         F.round(F.size(F.array_distinct(ts)) / nf, 9).alias("x3"),
     ).localCheckpoint(eager=True)
@@ -1986,8 +1965,7 @@ def _sql_calibration() -> str:
 WITH scored AS (
   SELECT doc_id,
          CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-         round(len(list_filter({toks}, t -> t IN {_LR_STOP}))
-                 / CAST(len({toks}) AS DOUBLE), 9) AS conf
+         round({tx.sql_stopword_ratio(toks)}, 9) AS conf
   FROM documents
 ),
 binned AS (
@@ -2031,11 +2009,10 @@ def eval_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         "eval_calibration_bins_cuts",
     )
     ts = tx.tokens("text")
-    stop = F.filter(ts, lambda t: t.isin("the", "a", "of", "and", "is"))
     scored = docs.select(
         "doc_id",
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
-        F.round(F.size(stop) / F.size(ts).cast("double"), 9).alias("conf"),
+        F.round(tx.stopword_ratio(ts), 9).alias("conf"),
     )
     binned = scored.withColumn(
         "bin", F.ntile(_CAL_BINS).over(Window.orderBy("conf", "doc_id"))
@@ -4544,7 +4521,6 @@ def stats_wilson_ci_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Bowling et al.'s logistic approximation to the normal CDF — the
 # BH-FDR / TOST convention: identical expression text on both engines.
 _PHI = "1.0 / (1.0 + exp(-1.5976 * ({z}) - 0.07056 * ({z}) * ({z}) * ({z})))"
-_MCN_STOPWORDS = "('the', 'a', 'of', 'and', 'is')"
 _MCN_THRESHOLD = 0.08  # classifier A: the eval_cohens_kappa decision rule
 def _sql_mcnemar() -> str:
     toks = tx.sql_tokens("text")
@@ -4553,8 +4529,7 @@ def _sql_mcnemar() -> str:
     return f"""
 WITH scored AS (
   SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS truth,
-         CASE WHEN round(len(list_filter({toks}, t -> t IN {_MCN_STOPWORDS}))
-                      / CAST(len({toks}) AS DOUBLE), 9) >= {_MCN_THRESHOLD}
+         CASE WHEN round({tx.sql_stopword_ratio(toks)}, 9) >= {_MCN_THRESHOLD}
               THEN 1 ELSE 0 END AS pa,
          CASE WHEN len(list_filter({toks}, t -> t = 'the')) > 0
               THEN 1 ELSE 0 END AS pb
@@ -4602,12 +4577,11 @@ def stats_mcnemar_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("truth"),
         tx.tokens("text").alias("toks"),
     )
-    stop = F.filter(F.col("toks"), lambda t: t.isin("the", "a", "of", "and", "is"))
     the = F.filter(F.col("toks"), lambda t: t == "the")
     scored = base.select(
         "truth",
         (
-            F.round(F.size(stop) / F.size("toks").cast("double"), 9)
+            F.round(tx.stopword_ratio(F.col("toks")), 9)
             >= _MCN_THRESHOLD
         ).cast("int").alias("pa"),
         (F.size(the) > 0).cast("int").alias("pb"),
@@ -5591,14 +5565,12 @@ def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the same literal every stats entry in the catalog shares, so p-values
 # are identical closed-form expressions on both engines.
 _PHI = "1.0 / (1.0 + exp(-1.5976 * ({z}) - 0.07056 * ({z}) * ({z}) * ({z})))"
-_LIFT_STOPWORDS = "('the', 'a', 'of', 'and', 'is')"
 def _sql_lift_cuts() -> str:
     toks = tx.sql_tokens("text")
     return f"""
 WITH scored AS (
   SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label,
-         CAST(round(len(list_filter({toks}, t -> t IN {_LIFT_STOPWORDS}))
-                      / CAST(len({toks}) AS DOUBLE) * 1e9)
+         CAST(round({tx.sql_stopword_ratio(toks)} * 1e9)
               AS BIGINT) AS s9
   FROM documents
   WHERE len({toks}) > 0
@@ -5661,10 +5633,9 @@ def eval_lift_gains_deciles_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.select("lang", tx.tokens("text").alias("toks")).filter(
         F.size("toks") > 0
     )
-    stop = F.filter(F.col("toks"), lambda t: t.isin("the", "a", "of", "and", "is"))
     scored = base.select(
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("label"),
-        F.round(F.size(stop) / F.size("toks").cast("double") * 1e9, 0)
+        F.round(tx.stopword_ratio(F.col("toks")) * 1e9, 0)
         .cast("bigint")
         .alias("s9"),
     ).localCheckpoint(eager=True)  # feeds the cut derivation AND assignment

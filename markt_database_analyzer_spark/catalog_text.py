@@ -14,22 +14,14 @@ from pyspark.sql import functions as F
 from .catalog import SQL_DAVG, SQL_DSUM, register, _t
 from .datapipe import text as tx
 from .functions import davg, dsum
-from .catalog import SQL_DSUM, register, _t
-from .functions import dsum
-from pyspark.sql import DataFrame, SparkSession
 from .datapipe.hashing import hash60, sql_hash60
-from .functions import davg
-from .catalog import register, _t
 from .datapipe import lm
-from .datapipe.sampling import RESOLUTION, _gate, sql_gate
+from .datapipe.sampling import RESOLUTION, sql_gate, train_eval_split, _gate
 from .datapipe.util import fan_out
-from .datapipe.sampling import RESOLUTION
-from .operators.equidepth import grouped_value_counts_cum
-from .datapipe.sampling import RESOLUTION, sql_gate, train_eval_split
-from .catalog import SQL_DAVG, _t, register
 from .operators.equidepth import (
     bucket_by_cuts,
     equi_depth_cut_points,
+    grouped_value_counts_cum,
     sql_cuts_ctes,
 )
 

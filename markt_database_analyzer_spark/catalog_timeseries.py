@@ -13,14 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from .catalog import SQL_DAVG, SQL_DSUM, register, _t
 from .functions import davg, dsum
-from .catalog import register, _t
-from .catalog import SQL_DSUM, register, _t
-from .functions import davg
-from pyspark.sql import DataFrame, SparkSession
-from .catalog import SQL_DAVG, register, _t
-from .functions.aggregates import davg
 from .operators.rolling import centered_rolling_mean
-from .catalog import SQL_DAVG, _t, register
 
 
 @register(

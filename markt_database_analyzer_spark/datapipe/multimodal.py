@@ -10,23 +10,32 @@ of typed metadata alongside. What is REAL here (and tested):
   an iterator of record batches, preserving partitioning, with bounded
   batch memory (the exact shape a real image decoder plugs into)
 
-Two backends ship for ``decode_features``:
+Every decoder is one row of the ``CODECS`` table (parser, featurizer,
+output schema, feature version, fixture) and runs in one envelope,
+``decode(df, codec)``; ``crafted(df, codec)`` builds the codec's
+md5-derived fixture payloads, which the catalog's DuckDB oracles replay
+as hex-pair arithmetic. The codecs:
 
-- ``backend="fake"`` — deterministic byte-stat featurizer (the original
-  stand-in, kept for the plumbing entries);
-- ``backend="real"`` — an actual pixel decoder for the self-describing
-  uncompressed raster formats (BMP 24-bpp BI_RGB and binary PPM ``P6``),
-  implemented in pure numpy inside the same Arrow ``mapInPandas``
-  plumbing: header parse → stride/padding/bottom-up handling → HxWx3
-  uint8 array → per-channel statistics. Payloads in formats that would
-  need an external codec (png/jpeg/...) decode to NULL feature columns
-  with ``format`` preserved — the batch shape, schema, and partitioning
-  are identical to what a PIL/ffmpeg featurizer plugs into.
+- ``bytes`` — deterministic byte-stat featurizer (the original stand-in,
+  kept for the plumbing entry; no fixture);
+- ``raster`` — BMP 24-bpp BI_RGB and binary PPM ``P6`` pixel decode;
+- ``wav`` — RIFF/WAVE PCM 16-bit;
+- ``gif`` / ``gif_anim`` — GIF87a/89a with LZW, single image and
+  animation;
+- ``png`` — 8-bit palette PNG with a complete RFC 1951 inflate.
+
+All are pure python/numpy. A payload a parser does not handle decodes to
+a ``format='unsupported'`` row with NULL features — the batch shape,
+schema and partitioning are identical to what a PIL/ffmpeg featurizer
+plugs into.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
+import hashlib
+from collections.abc import Callable, Iterator
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -66,34 +75,27 @@ def payload_meta(payload: Column | str) -> Column:
     )
 
 
-FEATURE_SCHEMA = (
-    "doc_id long, n_bytes long, byte_mean double, byte_min int, byte_max int, feature_version string"
-)
+def _md5(*keys: str) -> bytes:
+    """Concatenated md5 digests of ``keys``: the pixel/sample source of
+    every crafted fixture."""
+    return b"".join(hashlib.md5(k.encode("ascii")).digest() for k in keys)
 
 
-def _fake_decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Deterministic stand-in featurizer: byte statistics of the payload,
-    vectorized with numpy per payload (``np.frombuffer`` is zero-copy) —
-    the same inner-loop discipline a real decoder batch needs. Replaces
-    (e.g.) decode→resize→embed for an image batch."""
-    def stats(b: bytes) -> tuple[int, float, int, int]:
-        if not b:
-            return (0, 0.0, 0, 0)
-        arr = np.frombuffer(b, dtype=np.uint8)
-        return (len(b), float(arr.sum()) / len(b), int(arr.min()), int(arr.max()))
+def _md5_indices(d: int) -> tuple[bytes, np.ndarray]:
+    """The GIF/PNG fixture raster: 64 2-bit pixel indices, the bytes of
+    md5(str(d)), md5(str(d)+'a'), +'b', +'c' mod 4 (and the raw bytes)."""
+    raw = _md5(*(f"{d}{sfx}" for sfx in ("", "a", "b", "c")))
+    return raw, (np.frombuffer(raw, dtype=np.uint8) % 4).astype(np.int64)
 
-    s = pdf["payload"].map(stats)
-    out = pd.DataFrame(
-        {
-            "doc_id": pdf["doc_id"],
-            "n_bytes": s.map(lambda t: t[0]),
-            "byte_mean": s.map(lambda t: t[1]),
-            "byte_min": s.map(lambda t: t[2]),
-            "byte_max": s.map(lambda t: t[3]),
-            "feature_version": "fake-v1",
-        }
-    )
-    return out
+
+def _byte_stats(b: bytes) -> tuple[int, float, int, int]:
+    """Deterministic stand-in featurizer: byte statistics of the payload
+    (``np.frombuffer`` is zero-copy). Replaces (e.g.) decode→resize→embed
+    for an image batch."""
+    if not b:
+        return (0, 0.0, 0, 0)
+    arr = np.frombuffer(b, dtype=np.uint8)
+    return (len(b), float(arr.sum()) / len(b), int(arr.min()), int(arr.max()))
 
 
 # ---------------------------------------------------------------------------
@@ -103,12 +105,6 @@ def _fake_decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 # external codecs while exercising exactly the batch shape a PIL/ffmpeg
 # featurizer plugs into.
 # ---------------------------------------------------------------------------
-
-REAL_FEATURE_SCHEMA = (
-    "doc_id long, format string, width int, height int, n_pixels long, "
-    "mean_r double, mean_g double, mean_b double, feature_version string"
-)
-
 
 def encode_bmp(pixels: np.ndarray) -> bytes:
     """Minimal 24-bpp BI_RGB BMP encoder for an HxWx3 uint8 RGB array —
@@ -211,82 +207,26 @@ def decode_pixels(b: bytes) -> tuple[str, np.ndarray] | None:
     return _parse_bmp(b) or _parse_ppm(b)
 
 
-def _real_decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    rows = []
-    for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-        decoded = decode_pixels(bytes(payload) if payload is not None else b"")
-        if decoded is None:
-            rows.append((doc_id, "unsupported", None, None, None, None, None, None))
-            continue
-        fmt, px = decoded
-        means = px.reshape(-1, 3).mean(axis=0, dtype=np.float64)
-        rows.append(
-            (
-                doc_id, fmt, px.shape[1], px.shape[0],
-                px.shape[0] * px.shape[1],
-                round(float(means[0]), 6),
-                round(float(means[1]), 6),
-                round(float(means[2]), 6),
-            )
-        )
-    return pd.DataFrame(
-        rows,
-        columns=[
-            "doc_id", "format", "width", "height", "n_pixels",
-            "mean_r", "mean_g", "mean_b",
-        ],
-    ).assign(feature_version="real-v1")
+def _channel_means(decoded: tuple[str, np.ndarray]) -> tuple:
+    """(format, width, height, n_pixels, mean_r, mean_g, mean_b) of a
+    decoded HxWx3 raster."""
+    fmt, px = decoded
+    h, w, _ = px.shape
+    means = px.reshape(-1, 3).mean(axis=0, dtype=np.float64)
+    return (fmt, w, h, h * w, *(round(float(m), 6) for m in means))
 
 
-def decode_features(df: DataFrame, backend: str = "fake") -> DataFrame:
-    """Arrow-batched decode/feature extraction over (doc_id, payload).
-
-    ``backend="fake"`` runs the deterministic byte-stat featurizer;
-    ``backend="real"`` runs the zero-dependency raster decoder (BMP
-    24-bpp / PPM P6 → per-channel pixel means; unsupported formats →
-    NULL features). Both share the same ``mapInPandas`` iterator shape,
-    so swapping in a PIL/ffmpeg codec is a one-function change."""
-    if backend not in ("fake", "real"):
-        raise ValueError(f"unknown decode backend {backend!r}")
-    batch_fn = _real_decode_batch if backend == "real" else _fake_decode_batch
-    schema = REAL_FEATURE_SCHEMA if backend == "real" else FEATURE_SCHEMA
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield batch_fn(pdf)
-
-    return fan_out(df.select("doc_id", "payload")).mapInPandas(run, schema=schema)
-
-
-def crafted_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic media fixture builder for the decode entries: per id,
-    a 2x2 RGB image whose 12 pixel bytes are the first 12 md5 bytes of
-    ``str(id)`` — replayable as hex-pair arithmetic in ANSI SQL, so the
-    real decoder's output is fully value-checkable by the DuckDB oracle.
-    Container rotates on ``id % 3``: BMP (exercises stride padding +
-    bottom-up + BGR), PPM P6 (exercises ASCII header parse), and a
-    PNG-magic payload no zero-dependency decoder handles (exercises the
-    NULL-feature path). Pure map work inside the same Arrow plumbing."""
-    import hashlib
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col]:
-                raw = hashlib.md5(str(d).encode("ascii")).digest()[:12]
-                px = np.frombuffer(raw, dtype=np.uint8).reshape(2, 2, 3)
-                k = int(d) % 3
-                if k == 0:
-                    payloads.append(encode_bmp(px))
-                elif k == 1:
-                    payloads.append(encode_ppm(px))
-                else:
-                    payloads.append(b"\x89PNG\r\n\x1a\n" + raw)
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return fan_out(df.select(id_col)).mapInPandas(
-        build, schema=f"{id_col} long, payload binary"
-    )
+def _raster_fixture(d: int) -> bytes:
+    """A 2x2 RGB image whose 12 pixel bytes are the first 12 md5 bytes of
+    ``str(d)``. Container rotates on ``d % 3``: BMP (exercises stride
+    padding + bottom-up + BGR), PPM P6 (exercises ASCII header parse), and
+    a PNG-magic payload no raster decoder handles (the NULL-feature path)."""
+    raw = _md5(str(d))[:12]
+    k = d % 3
+    if k == 2:
+        return PNG_SIG + raw
+    px = np.frombuffer(raw, dtype=np.uint8).reshape(2, 2, 3)
+    return encode_bmp(px) if k == 0 else encode_ppm(px)
 
 
 def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
@@ -307,12 +247,6 @@ def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
 # extra chunks, odd-size pad bytes), so a libsndfile/ffmpeg featurizer
 # plugs into the identical mapInPandas batch shape.
 # ---------------------------------------------------------------------------
-
-AUDIO_FEATURE_SCHEMA = (
-    "doc_id long, format string, n_channels int, sample_rate int, "
-    "n_frames bigint, n_samples bigint, mean_amp double, rms double, "
-    "clip_frac double, feature_version string"
-)
 
 # |sample| at or above this counts as clipped for clip_frac — a fixed
 # featurizer constant (full-scale int16 minus headroom), mirrored in the
@@ -372,84 +306,35 @@ def _parse_wav(b: bytes) -> tuple[int, int, np.ndarray] | None:
     return n_channels, sample_rate, np.frombuffer(data, dtype="<i2")
 
 
-def _audio_decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    rows = []
-    for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-        parsed = _parse_wav(bytes(payload) if payload is not None else b"")
-        if parsed is None:
-            rows.append((doc_id, "unsupported", None, None, None, None, None, None, None))
-            continue
-        n_channels, sample_rate, smp = parsed
-        n = len(smp)
-        s64 = smp.astype(np.int64)
-        # exact integer sums first, float division last — the same
-        # operation order the SQL oracle replays, so doubles bit-match
-        mean_amp = float(int(s64.sum())) / n if n else None
-        rms = round(float(np.sqrt(float(int((s64 * s64).sum())) / n)), 6) if n else None
-        clip = float(int((np.abs(s64) >= CLIP_ABS).sum())) / n if n else None
-        rows.append(
-            (doc_id, "wav", n_channels, sample_rate,
-             n // n_channels, n, mean_amp, rms, clip)
-        )
-    return pd.DataFrame(
-        rows,
-        columns=[
-            "doc_id", "format", "n_channels", "sample_rate",
-            "n_frames", "n_samples", "mean_amp", "rms", "clip_frac",
-        ],
-    ).assign(feature_version="audio-v1")
+def _amplitude_stats(parsed: tuple[int, int, np.ndarray]) -> tuple:
+    """(format, n_channels, sample_rate, n_frames, n_samples, mean_amp,
+    rms, clip_frac) of decoded PCM samples."""
+    n_channels, sample_rate, smp = parsed
+    n = len(smp)
+    s64 = smp.astype(np.int64)
+    # exact integer sums first, float division last — the same
+    # operation order the SQL oracle replays, so doubles bit-match
+    mean_amp = float(int(s64.sum())) / n if n else None
+    rms = round(float(np.sqrt(float(int((s64 * s64).sum())) / n)), 6) if n else None
+    clip = float(int((np.abs(s64) >= CLIP_ABS).sum())) / n if n else None
+    return ("wav", n_channels, sample_rate, n // n_channels, n, mean_amp, rms, clip)
 
 
-def decode_audio_features(df: DataFrame) -> DataFrame:
-    """Arrow-batched WAV decode over (doc_id, payload): RIFF chunk walk →
-    PCM int16 samples → per-doc amplitude statistics; non-WAV payloads →
-    NULL features with ``format='unsupported'``. Same mapInPandas
-    iterator shape as ``decode_features`` — map-only, partition-
-    preserving, bounded batch memory."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _audio_decode_batch(pdf)
-
-    return fan_out(df.select("doc_id", "payload")).mapInPandas(
-        run, schema=AUDIO_FEATURE_SCHEMA
-    )
-
-
-def crafted_audio_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic audio fixture builder: per id, 8 int16 samples are
-    the first 16 md5 bytes of ``str(id)`` read little-endian — replayable
-    as hex-pair arithmetic in ANSI SQL, so the real decoder's output is
-    fully value-checkable by the DuckDB oracle. Container rotates on
-    ``id % 3``: mono WAV (straight fmt→data layout), stereo WAV with an
-    extra LIST chunk between fmt and data (exercises the chunk walker and
-    interleave accounting), and an ID3-magic payload no zero-dependency
-    decoder handles (exercises the NULL-feature path). Sample rate
-    varies as ``8000 + 1000 * (id % 5)`` so the header parse is
-    value-checked too. Pure map work inside the same Arrow plumbing."""
-    import hashlib
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col]:
-                raw = hashlib.md5(str(d).encode("ascii")).digest()[:16]
-                smp = np.frombuffer(raw, dtype="<i2")
-                k = int(d) % 3
-                sr = 8000 + 1000 * (int(d) % 5)
-                if k == 0:
-                    payloads.append(encode_wav(smp, n_channels=1, sample_rate=sr))
-                elif k == 1:
-                    extra = b"LIST" + (6).to_bytes(4, "little") + b"INFOab"
-                    payloads.append(
-                        encode_wav(smp, n_channels=2, sample_rate=sr, extra_chunk=extra)
-                    )
-                else:
-                    payloads.append(b"ID3\x03\x00" + raw)
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return fan_out(df.select(id_col)).mapInPandas(
-        build, schema=f"{id_col} long, payload binary"
-    )
+def _wav_fixture(d: int) -> bytes:
+    """8 int16 samples, the first 16 md5 bytes of ``str(d)`` read
+    little-endian, at sample rate ``8000 + 1000 * (d % 5)``. Container
+    rotates on ``d % 3``: mono WAV (straight fmt→data layout), stereo WAV
+    with an extra LIST chunk between fmt and data (exercises the chunk
+    walker and interleave accounting), and an ID3-magic payload (the
+    NULL-feature path)."""
+    raw = _md5(str(d))[:16]
+    k = d % 3
+    if k == 2:
+        return b"ID3\x03\x00" + raw
+    smp = np.frombuffer(raw, dtype="<i2")
+    extra = (b"LIST" + (6).to_bytes(4, "little") + b"INFOab") if k == 1 else None
+    return encode_wav(smp, n_channels=k + 1, sample_rate=8000 + 1000 * (d % 5),
+                      extra_chunk=extra)
 
 
 # ---------------------------------------------------------------------------
@@ -460,12 +345,6 @@ def crafted_audio_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 # chunk walker additionally skips extension blocks — so a libgif/PIL
 # featurizer plugs into the identical mapInPandas batch shape.
 # ---------------------------------------------------------------------------
-
-GIF_FEATURE_SCHEMA = (
-    "doc_id long, format string, width int, height int, n_pixels bigint, "
-    "n_colors int, mean_r double, mean_g double, mean_b double, "
-    "feature_version string"
-)
 
 # Fixed 4-colour palette for the crafted fixture (2-bit indices): black,
 # pure R, pure G, pure B — channel means then reduce to exact index
@@ -667,87 +546,33 @@ def _parse_gif(b: bytes) -> tuple[int, int, np.ndarray, np.ndarray] | None:
     return None
 
 
-def _gif_decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    rows = []
-    for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-        parsed = _parse_gif(bytes(payload) if payload is not None else b"")
-        if parsed is None:
-            rows.append((doc_id, "unsupported", None, None, None, None, None, None, None))
-            continue
-        width, height, palette, idx = parsed
-        n = len(idx)
-        rgb = palette[idx]
-        # exact integer channel sums first, float division last — the
-        # same operation order the SQL oracle replays
-        means = [
-            round(float(int(rgb[:, c].sum())) / n, 6) if n else None
-            for c in range(3)
-        ]
-        rows.append(
-            (doc_id, "gif", width, height, n, len(palette), *means)
-        )
-    return pd.DataFrame(
-        rows,
-        columns=[
-            "doc_id", "format", "width", "height", "n_pixels",
-            "n_colors", "mean_r", "mean_g", "mean_b",
-        ],
-    ).assign(feature_version="gif-v1")
+def _palette_means(fmt: str, parsed: tuple[int, int, np.ndarray, np.ndarray]) -> tuple:
+    """(format, width, height, n_pixels, n_colors, mean_r, mean_g, mean_b)
+    of a decoded palette image (GIF or PNG)."""
+    width, height, palette, idx = parsed
+    n = len(idx)
+    rgb = palette[idx]
+    # exact integer channel sums first, float division last — the
+    # same operation order the SQL oracle replays
+    means = [round(float(int(rgb[:, c].sum())) / n, 6) if n else None for c in range(3)]
+    return (fmt, width, height, n, len(palette), *means)
 
 
-def decode_gif_features(df: DataFrame) -> DataFrame:
-    """Arrow-batched GIF decode over (doc_id, payload): header + GCT
-    parse → extension-skipping chunk walk → sub-block reassembly → LZW
-    decode → per-channel palette-weighted pixel means; non-GIF payloads
-    → NULL features with ``format='unsupported'``. Same mapInPandas
-    iterator shape as the raster/audio twins — map-only, partition-
-    preserving, bounded batch memory."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _gif_decode_batch(pdf)
-
-    return fan_out(df.select("doc_id", "payload")).mapInPandas(
-        run, schema=GIF_FEATURE_SCHEMA
-    )
-
-
-def crafted_gif_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic GIF fixture builder: per id, 64 2-bit pixel indices
-    are md5(str(id)), md5(str(id)+'a'), +'b', +'c' bytes mod 4 —
-    replayable as hex-pair arithmetic in ANSI SQL, so the real LZW
-    decoder's output is fully value-checkable by the DuckDB oracle.
-    Container rotates on ``id % 3``: 8x8 GIF87a (straight layout), 16x4
-    GIF with a comment extension before the image descriptor (exercises
-    the chunk walker AND a different header geometry), and a PNG-magic
-    payload no zero-dependency decoder handles (the NULL-feature path).
-    64 four-symbol pixels push the LZW dictionary across the 3→4→5→6
-    bit code-width boundaries, so width growth is exercised on every
-    payload. Pure map work inside the same Arrow plumbing."""
-    import hashlib
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col]:
-                raw = b"".join(
-                    hashlib.md5((str(d) + sfx).encode("ascii")).digest()
-                    for sfx in ("", "a", "b", "c")
-                )
-                idx = (np.frombuffer(raw, dtype=np.uint8) % 4).astype(np.int64)
-                k = int(d) % 3
-                if k == 0:
-                    payloads.append(encode_gif(idx.reshape(8, 8)))
-                elif k == 1:
-                    payloads.append(
-                        encode_gif(idx.reshape(4, 16), comment=b"crafted")
-                    )
-                else:
-                    payloads.append(b"\x89PNG\r\n\x1a\n" + raw)
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return fan_out(df.select(id_col)).mapInPandas(
-        build, schema=f"{id_col} long, payload binary"
-    )
+def _gif_fixture(d: int) -> bytes:
+    """The 64 md5-derived pixel indices (``_md5_indices``) over the fixed
+    4-colour palette. Container rotates on ``d % 3``: 8x8 GIF87a (straight
+    layout), 16x4 GIF with a comment extension before the image descriptor
+    (exercises the chunk walker AND a different header geometry), and a
+    PNG-magic payload (the NULL-feature path). 64 four-symbol pixels push
+    the LZW dictionary across the 3→4→5→6 bit code-width boundaries, so
+    width growth is exercised on every payload."""
+    raw, idx = _md5_indices(d)
+    k = d % 3
+    if k == 2:
+        return PNG_SIG + raw
+    if k == 1:
+        return encode_gif(idx.reshape(4, 16), comment=b"crafted")
+    return encode_gif(idx.reshape(8, 8))
 
 
 # ---------------------------------------------------------------------------
@@ -756,13 +581,6 @@ def crafted_gif_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 # video-like container. Reuses the round-12 LZW machinery; a real
 # ffmpeg-style frame featurizer plugs into the identical batch shape.
 # ---------------------------------------------------------------------------
-
-GIF_ANIM_FEATURE_SCHEMA = (
-    "doc_id long, format string, n_frames int, width int, height int, "
-    "n_pixels_total bigint, total_cs int, mean_idx double, motion double, "
-    "feature_version string"
-)
-
 
 def encode_gif_animation(
     frames: list, delays_cs: list, palette: np.ndarray = GIF_PALETTE
@@ -878,88 +696,40 @@ def _parse_gif_frames(
     return None  # ran off the end without a trailer
 
 
-def _gif_anim_decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    rows = []
-    for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-        parsed = _parse_gif_frames(bytes(payload) if payload is not None else b"")
-        if parsed is None:
-            rows.append(
-                (doc_id, "unsupported", None, None, None, None, None, None, None)
-            )
-            continue
-        width, height, _palette, frames, total_cs = parsed
-        k, px = len(frames), width * height
-        total = k * px
-        # exact integer sums first, float division last — the SQL
-        # oracle's operation order
-        mean_idx = round(float(int(sum(int(f.sum()) for f in frames))) / total, 6)
-        if k > 1:
-            msum = sum(
-                int(np.abs(frames[i] - frames[i - 1]).sum()) for i in range(1, k)
-            )
-            motion = round(float(msum) / ((k - 1) * px), 6)
-        else:
-            motion = None
-        rows.append(
-            (doc_id, "gif", k, width, height, total, total_cs, mean_idx, motion)
-        )
-    return pd.DataFrame(
-        rows,
-        columns=[
-            "doc_id", "format", "n_frames", "width", "height",
-            "n_pixels_total", "total_cs", "mean_idx", "motion",
-        ],
-    ).assign(feature_version="gifanim-v1")
+def _frame_stats(parsed: tuple[int, int, np.ndarray, list, int]) -> tuple:
+    """(format, n_frames, width, height, n_pixels_total, total_cs,
+    mean_idx, motion) of a decoded animation; motion is the mean absolute
+    per-pixel index delta between consecutive frames (NULL for one frame)."""
+    width, height, _palette, frames, total_cs = parsed
+    k, px = len(frames), width * height
+    total = k * px
+    # exact integer sums first, float division last — the SQL
+    # oracle's operation order
+    mean_idx = round(float(int(sum(int(f.sum()) for f in frames))) / total, 6)
+    if k > 1:
+        msum = sum(int(np.abs(frames[i] - frames[i - 1]).sum()) for i in range(1, k))
+        motion = round(float(msum) / ((k - 1) * px), 6)
+    else:
+        motion = None
+    return ("gif", k, width, height, total, total_cs, mean_idx, motion)
 
 
-def decode_gif_anim_features(df: DataFrame) -> DataFrame:
-    """Arrow-batched animated-GIF decode over (doc_id, payload): the
-    multi-frame chunk walk (graphics-control delay accounting, one LZW
-    decode per image block) → frame count, duration, overall index mean
-    and inter-frame motion; non-GIF payloads → NULL features. Same
-    map-only mapInPandas envelope as every decode twin."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _gif_anim_decode_batch(pdf)
-
-    return fan_out(df.select("doc_id", "payload")).mapInPandas(
-        run, schema=GIF_ANIM_FEATURE_SCHEMA
-    )
-
-
-def crafted_gif_anim_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic animated-GIF fixture: frame f's pixel indices are
-    the first (width*height) md5(str(id) + 'f' + str(f)) bytes mod 4;
-    per-frame delay is (id + f) % 7 centiseconds — both replayable as
-    hex-pair arithmetic in ANSI SQL. Container rotates on ``id % 3``:
-    3 frames of 4x4, 5 frames of 4x2 (different geometry AND frame
-    count), and a JPEG-magic payload (the NULL-feature path)."""
-    import hashlib
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col]:
-                k = int(d) % 3
-                if k == 2:
-                    payloads.append(
-                        b"\xff\xd8\xff\xe0"
-                        + hashlib.md5(str(d).encode("ascii")).digest()
-                    )
-                    continue
-                n_frames, (h, w) = ((3, (4, 4)), (5, (2, 4)))[k]
-                frames, delays = [], []
-                for f in range(n_frames):
-                    raw = hashlib.md5(f"{d}f{f}".encode("ascii")).digest()[: h * w]
-                    idx = (np.frombuffer(raw, dtype=np.uint8) % 4).astype(np.int64)
-                    frames.append(idx.reshape(h, w))
-                    delays.append((int(d) + f) % 7)
-                payloads.append(encode_gif_animation(frames, delays))
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return fan_out(df.select(id_col)).mapInPandas(
-        build, schema=f"{id_col} long, payload binary"
-    )
+def _gif_anim_fixture(d: int) -> bytes:
+    """Frame f's pixel indices are the first (width*height) bytes of
+    md5(str(d) + 'f' + str(f)) mod 4; frame f's delay is (d + f) % 7
+    centiseconds. Container rotates on ``d % 3``: 3 frames of 4x4, 5
+    frames of 4x2 (different geometry AND frame count), and a JPEG-magic
+    payload (the NULL-feature path)."""
+    k = d % 3
+    if k == 2:
+        return b"\xff\xd8\xff\xe0" + _md5(str(d))
+    n_frames, (h, w) = ((3, (4, 4)), (5, (2, 4)))[k]
+    frames = [
+        (np.frombuffer(_md5(f"{d}f{f}")[: h * w], dtype=np.uint8) % 4)
+        .astype(np.int64).reshape(h, w)
+        for f in range(n_frames)
+    ]
+    return encode_gif_animation(frames, [(d + f) % 7 for f in range(n_frames)])
 
 
 # ---------------------------------------------------------------------------
@@ -1713,97 +1483,137 @@ def _parse_png(b: bytes) -> tuple[int, int, np.ndarray, np.ndarray] | None:
     return w, h, palette.astype(np.int64), idx
 
 
-def _png_decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+def _png_fixture(d: int) -> bytes:
+    """The SAME 64 md5-derived pixel indices as the GIF fixture. Container
+    rotates on ``d % 4`` — one variant per DEFLATE block type plus the
+    rejection path: 8x8 stored-block PNG with all five filter predictors
+    rotating across rows; 4x16 fixed-Huffman PNG (real LZ77
+    back-references) with the predictor rotation reversed AND the stream
+    split across two IDAT chunks; 8x8 dynamic-Huffman PNG
+    (frequency-derived trees, RLE-coded header) with a third predictor
+    rotation; and a GIF-magic payload (the NULL-feature path)."""
+    raw, idx = _md5_indices(d)
+    k = d % 4
+    if k == 0:
+        return encode_png(idx.reshape(8, 8), method="stored", filters=[0, 1, 2, 3, 4])
+    if k == 1:
+        return encode_png(idx.reshape(4, 16), method="fixed",
+                          filters=[4, 3, 2, 1, 0], split_idat=True)
+    if k == 2:
+        return encode_png(idx.reshape(8, 8), method="dynamic", filters=[2, 0, 4, 1, 3])
+    return b"GIF87a" + raw
+
+
+# ---------------------------------------------------------------------------
+# The codec table and the one Arrow decode envelope every codec runs in.
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class Codec:
+    """One decoder. ``parse`` turns payload bytes into a decoded value, or
+    None for a payload it does not handle; ``featurize`` turns that value
+    into the columns of ``schema`` between ``doc_id`` and
+    ``feature_version``; ``fixture`` builds the crafted payload of one
+    doc_id (None: the codec has no fixture)."""
+
+    parse: Callable[[bytes], object]
+    featurize: Callable[[object], tuple]
+    schema: str
+    version: str
+    fixture: Callable[[int], bytes] | None = None
+
+
+_PALETTE_SCHEMA = (
+    "doc_id long, format string, width int, height int, n_pixels bigint, "
+    "n_colors int, mean_r double, mean_g double, mean_b double, "
+    "feature_version string"
+)
+
+CODECS: dict[str, Codec] = {
+    # every payload parses: the bytes themselves are the decoded value
+    "bytes": Codec(
+        bytes, _byte_stats,
+        "doc_id long, n_bytes long, byte_mean double, byte_min int, byte_max int, "
+        "feature_version string",
+        "fake-v1",
+    ),
+    "raster": Codec(
+        decode_pixels, _channel_means,
+        "doc_id long, format string, width int, height int, n_pixels long, "
+        "mean_r double, mean_g double, mean_b double, feature_version string",
+        "real-v1", _raster_fixture,
+    ),
+    "wav": Codec(
+        _parse_wav, _amplitude_stats,
+        "doc_id long, format string, n_channels int, sample_rate int, "
+        "n_frames bigint, n_samples bigint, mean_amp double, rms double, "
+        "clip_frac double, feature_version string",
+        "audio-v1", _wav_fixture,
+    ),
+    "gif": Codec(
+        _parse_gif, functools.partial(_palette_means, "gif"), _PALETTE_SCHEMA,
+        "gif-v1", _gif_fixture,
+    ),
+    "gif_anim": Codec(
+        _parse_gif_frames, _frame_stats,
+        "doc_id long, format string, n_frames int, width int, height int, "
+        "n_pixels_total bigint, total_cs int, mean_idx double, motion double, "
+        "feature_version string",
+        "gifanim-v1", _gif_anim_fixture,
+    ),
+    "png": Codec(
+        _parse_png, functools.partial(_palette_means, "png"), _PALETTE_SCHEMA,
+        "png-v1", _png_fixture,
+    ),
+}
+
+
+def _codec(name: str) -> Codec:
+    if name not in CODECS:
+        raise ValueError(f"unknown codec {name!r}; expected one of {sorted(CODECS)}")
+    return CODECS[name]
+
+
+def decode_batch(pdf: pd.DataFrame, codec: str) -> pd.DataFrame:
+    """Decode one batch of (doc_id, payload): one feature row per payload,
+    ``format='unsupported'`` and NULL features where the parser returns
+    None. Column names come from the codec's schema."""
+    c = _codec(codec)
+    names = [field.split()[0] for field in c.schema.split(",")][:-1]
+    unsupported = ("unsupported",) + (None,) * (len(names) - 2)
     rows = []
     for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-        parsed = _parse_png(bytes(payload) if payload is not None else b"")
-        if parsed is None:
-            rows.append((doc_id, "unsupported", None, None, None, None, None, None, None))
-            continue
-        width, height, palette, idx = parsed
-        n = len(idx)
-        rgb = palette[idx]
-        means = [
-            round(float(int(rgb[:, c].sum())) / n, 6) if n else None
-            for c in range(3)
-        ]
-        rows.append((doc_id, "png", width, height, n, len(palette), *means))
-    return pd.DataFrame(
-        rows,
-        columns=[
-            "doc_id", "format", "width", "height", "n_pixels",
-            "n_colors", "mean_r", "mean_g", "mean_b",
-        ],
-    ).assign(feature_version="png-v1")
+        parsed = c.parse(bytes(payload) if payload is not None else b"")
+        rows.append((doc_id, *(unsupported if parsed is None else c.featurize(parsed))))
+    return pd.DataFrame(rows, columns=names).assign(feature_version=c.version)
 
 
-def decode_png_features(df: DataFrame) -> DataFrame:
-    """Arrow-batched PNG decode over (doc_id, payload): CRC-verified
-    chunk walk → IDAT reassembly → zlib/DEFLATE inflate (stored +
-    fixed-Huffman with LZ77 back-references) → five-predictor unfilter
-    → per-channel palette-weighted pixel means; non-PNG payloads →
-    NULL features with ``format='unsupported'``. Same mapInPandas
-    iterator shape as the raster/audio/GIF twins — map-only,
-    partition-preserving, bounded batch memory."""
+def decode(df: DataFrame, codec: str) -> DataFrame:
+    """Arrow-batched decode/feature extraction over (doc_id, payload) with
+    one ``CODECS`` row: map-only, partition-preserving, bounded batch
+    memory. Swapping in a PIL/ffmpeg codec is one new table row."""
+    schema = _codec(codec).schema
+
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            yield _png_decode_batch(pdf)
+            yield decode_batch(pdf, codec)
 
-    return fan_out(df.select("doc_id", "payload")).mapInPandas(
-        run, schema=GIF_FEATURE_SCHEMA
-    )
+    return fan_out(df.select("doc_id", "payload")).mapInPandas(run, schema=schema)
 
 
-def crafted_png_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic PNG fixture builder: the SAME 64 md5-derived 2-bit
-    pixel indices as the GIF fixture (md5(str(id)), +'a', +'b', +'c'
-    bytes mod 4 over the fixed 4-colour palette), so the oracle replays
-    the features as hex-pair arithmetic. Container rotates on
-    ``id % 4`` — one variant per DEFLATE block type plus the rejection
-    path: 8x8 stored-block PNG with all five filter predictors rotating
-    across rows; 4x16 fixed-Huffman PNG (real LZ77 back-references)
-    with the predictor rotation reversed AND the stream split across
-    two IDAT chunks; 8x8 dynamic-Huffman PNG (frequency-derived trees,
-    RLE-coded header) with a third predictor rotation; and a GIF-magic
-    payload (the NULL-feature unsupported path). Pure map work inside
-    the same Arrow plumbing."""
-    import hashlib
+def crafted(df: DataFrame, codec: str) -> DataFrame:
+    """(doc_id, payload) with the codec's crafted fixture payload per
+    doc_id. Every fixture derives its pixels/samples from md5 digests of
+    the id, so the catalog's DuckDB oracle replays the decoded features as
+    hex-pair arithmetic: the decoder's output is value-checked, not just
+    its row count. Pure map work inside the same Arrow plumbing."""
+    fixture = _codec(codec).fixture
+    if fixture is None:
+        raise ValueError(f"codec {codec!r} has no crafted fixture")
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            payloads = []
-            for d in pdf[id_col]:
-                raw = b"".join(
-                    hashlib.md5((str(d) + sfx).encode("ascii")).digest()
-                    for sfx in ("", "a", "b", "c")
-                )
-                idx = (np.frombuffer(raw, dtype=np.uint8) % 4).astype(np.int64)
-                k = int(d) % 4
-                if k == 0:
-                    payloads.append(
-                        encode_png(
-                            idx.reshape(8, 8), method="stored",
-                            filters=[0, 1, 2, 3, 4],
-                        )
-                    )
-                elif k == 1:
-                    payloads.append(
-                        encode_png(
-                            idx.reshape(4, 16), method="fixed",
-                            filters=[4, 3, 2, 1, 0], split_idat=True,
-                        )
-                    )
-                elif k == 2:
-                    payloads.append(
-                        encode_png(
-                            idx.reshape(8, 8), method="dynamic",
-                            filters=[2, 0, 4, 1, 3],
-                        )
-                    )
-                else:
-                    payloads.append(b"GIF87a" + raw)
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
+            yield pdf.assign(payload=[fixture(int(d)) for d in pdf["doc_id"]])
 
-    return fan_out(df.select(id_col)).mapInPandas(
-        build, schema=f"{id_col} long, payload binary"
-    )
+    return fan_out(df.select("doc_id")).mapInPandas(build, schema="doc_id long, payload binary")

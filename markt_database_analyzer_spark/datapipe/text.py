@@ -41,6 +41,22 @@ def sql_tokens(expr: str) -> str:
     return f"list_filter(regexp_split_to_array(lower(trim({expr})), '\\s+'), t -> t != '')"
 
 
+# The eval/stats classifier fixture scores a document by the share of
+# its tokens that are these English stopwords (label: lang = 'en').
+EVAL_STOPWORDS = ("the", "a", "of", "and", "is")
+
+
+def stopword_ratio(toks: Column) -> Column:
+    """Share of a token array that is ``EVAL_STOPWORDS``, as a double.
+    Rounding, scaling and the zero-token guard stay with the caller."""
+    return F.size(F.filter(toks, lambda t: t.isin(*EVAL_STOPWORDS))) / F.size(toks).cast("double")
+
+
+def sql_stopword_ratio(toks_expr: str) -> str:
+    words = ", ".join(f"'{w}'" for w in EVAL_STOPWORDS)
+    return f"(len(list_filter({toks_expr}, t -> t IN ({words}))) / CAST(len({toks_expr}) AS DOUBLE))"
+
+
 def token_count_whitespace(col: Column | str) -> Column:
     return F.size(tokens(col))
 

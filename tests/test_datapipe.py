@@ -173,16 +173,19 @@ def test_multimodal_decode_stub(spark):
     df = spark.createDataFrame([(1, "abc")], "doc_id long, text string").select(
         "doc_id", mm.to_payload("text").alias("payload")
     )
-    row = mm.decode_features(df).first()
+    row = mm.decode(df, "bytes").first()
     assert row["n_bytes"] == 3 and row["byte_min"] == ord("a") and row["byte_max"] == ord("c")
     assert row["feature_version"] == "fake-v1"
-    # backend="real" is a working raster decoder since round 10
+    # the "raster" codec is a working pixel decoder
     # (tests/test_multimodal_real.py); a text payload has no BMP/PPM
     # magic, so it takes the NULL-feature unsupported path
-    real = mm.decode_features(df, backend="real").first()
+    real = mm.decode(df, "raster").first()
     assert real["format"] == "unsupported" and real["width"] is None
-    with pytest.raises(ValueError, match="backend"):
-        mm.decode_features(df, backend="nope")
+    with pytest.raises(ValueError, match="nope"):
+        mm.decode(df, "nope")
+    # "bytes" decodes arbitrary payloads, so it has no crafted fixture
+    with pytest.raises(ValueError, match="bytes"):
+        mm.crafted(df, "bytes")
 
 
 def test_frame_sample_plan(spark):

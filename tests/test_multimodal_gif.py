@@ -110,7 +110,7 @@ def test_gif_batch_stats_match_hand_computation():
     pdf = pd.DataFrame(
         {"doc_id": [1, 2], "payload": [mm.encode_gif(idx), b"\x89PNG\r\n\x1a\nxx"]}
     )
-    out = mm._gif_decode_batch(pdf)
+    out = mm.decode_batch(pdf, "gif")
     assert out.loc[0, "format"] == "gif"
     assert (out.loc[0, "width"], out.loc[0, "height"]) == (8, 8)
     assert out.loc[0, "n_pixels"] == 64 and out.loc[0, "n_colors"] == 4
@@ -230,7 +230,7 @@ def test_gif_anim_batch_stats_match_hand_computation():
             ],
         }
     )
-    out = mm._gif_anim_decode_batch(pdf)
+    out = mm.decode_batch(pdf, "gif_anim")
     assert out.loc[0, "format"] == "gif"
     assert out.loc[0, "n_frames"] == 2 and out.loc[0, "total_cs"] == 11
     assert out.loc[0, "n_pixels_total"] == 32
@@ -244,7 +244,7 @@ def test_gif_anim_single_frame_motion_is_null():
     pdf = pd.DataFrame(
         {"doc_id": [1], "payload": [mm.encode_gif_animation([_idx(16).reshape(4, 4)], [3])]}
     )
-    out = mm._gif_anim_decode_batch(pdf)
+    out = mm.decode_batch(pdf, "gif_anim")
     assert out.loc[0, "n_frames"] == 1 and pd.isna(out.loc[0, "motion"])
 
 

@@ -284,8 +284,8 @@ def test_crafted_payload_variants():
                                     filters=[2, 0, 4, 1, 3])
         else:
             payload = b"GIF87a" + raw
-        got = mm._png_decode_batch(
-            pd.DataFrame({"doc_id": [d], "payload": [payload]})
+        got = mm.decode_batch(
+            pd.DataFrame({"doc_id": [d], "payload": [payload]}), "png"
         )
         assert got["format"][0] == expect
         if expect == "png":

@@ -93,7 +93,7 @@ def test_rejections_return_none():
 def test_real_batch_means_match_hand_computation():
     px = _px(2, 2, seed=1)
     pdf = pd.DataFrame({"doc_id": [1], "payload": [mm.encode_bmp(px)]})
-    out = mm._real_decode_batch(pdf)
+    out = mm.decode_batch(pdf, "raster")
     flat = px.reshape(-1, 3).astype(float)
     assert out.loc[0, "format"] == "bmp"
     assert out.loc[0, "mean_r"] == round(flat[:, 0].mean(), 6)
