@@ -30,7 +30,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions import (
@@ -135,6 +135,37 @@ _SQL_EVENTS_AGE = """
          (epoch_us(ts) - min(epoch_us(ts)) OVER (PARTITION BY user_id))
             / 60000000.0 AS age_min
   FROM events
+"""
+
+
+# ---------------------------------------------------------------------------
+# Shared daily series over `lineitem`: discounted revenue per ship day in
+# exact integer cents, (d, x). The day-grain finance/stats/timeseries
+# entries analyse it; the ones with another shape share the cents term.
+# ---------------------------------------------------------------------------
+
+def _revenue_cents() -> Column:
+    return F.round(
+        F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100.0
+    ).cast("bigint")
+
+
+_SQL_REVENUE_CENTS = "CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0) AS BIGINT)"
+
+
+def _daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = _t(spark, sf_dir, "lineitem").select(
+        "l_shipdate", "l_extendedprice", "l_discount"
+    )
+    return li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
+        F.sum(_revenue_cents()).cast("bigint").alias("x")
+    )
+
+
+_SQL_DAILY_REVENUE = f"""
+  SELECT date_trunc('day', l_shipdate) AS d,
+         CAST(sum({_SQL_REVENUE_CENTS}) AS BIGINT) AS x
+  FROM lineitem GROUP BY 1
 """
 
 
@@ -746,10 +777,6 @@ def set_intersect_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     f = orders.filter(F.col("o_orderstatus") == "F").select("o_custkey")
     o = orders.filter(F.col("o_orderstatus") == "O").select("o_custkey")
     return f.intersect(o).sortWithinPartitions("o_custkey")
-
-
-def headline_queries() -> dict[str, QuerySpec]:
-    return {k: v for k, v in REGISTRY.items() if v.headline}
 
 
 # Extension operators (dedup / similarity / text / multimodal / streaming)

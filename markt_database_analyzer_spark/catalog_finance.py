@@ -11,7 +11,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from .catalog import SQL_DAVG, SQL_DSUM, demo_guard, register, _t
+from .catalog import (
+    SQL_DAVG,
+    SQL_DSUM,
+    _SQL_DAILY_REVENUE,
+    _daily_revenue,
+    demo_guard,
+    register,
+    _t,
+)
 from .functions import davg, dsum
 from .operators.equidepth import (
     bucket_by_cuts,
@@ -415,12 +423,7 @@ def finance_rsi_sma(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ANN = 252.0  # trading-day annualization
 def _sql_sharpe() -> str:
     return f"""
-WITH daily AS (
-  SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0)
-                       AS BIGINT)) AS BIGINT) AS x
-  FROM lineitem GROUP BY 1
-),
+WITH daily AS ({_SQL_DAILY_REVENUE}),
 led AS (
   SELECT d, x, lag(x) OVER (ORDER BY d) AS xp FROM daily
 ),
@@ -471,16 +474,7 @@ def finance_sharpe_sortino(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one map-side-combined daily aggregate is the only
     data-sized stage; the lag window and moments run over the
     day-grain frame (~years x 365 rows at any corpus size)."""
-    li = _t(spark, sf_dir, "lineitem")
-    daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
-        F.sum(
-            F.round(
-                F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100.0
-            ).cast("bigint")
-        )
-        .cast("bigint")
-        .alias("x")
-    )
+    daily = _daily_revenue(spark, sf_dir)
     w = Window.orderBy("d")
     led = daily.select("d", "x", F.lag("x").over(w).alias("xp"))
     r = led.filter(F.col("xp").isNotNull()).select(
@@ -519,12 +513,7 @@ def finance_sharpe_sortino(spark: SparkSession, sf_dir: str) -> DataFrame:
 _VAR_ALPHA = 0.05  # 95% VaR
 def _sql_var_cvar() -> str:
     return f"""
-WITH daily AS (
-  SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0)
-                       AS BIGINT)) AS BIGINT) AS x
-  FROM lineitem GROUP BY 1
-),
+WITH daily AS ({_SQL_DAILY_REVENUE}),
 led AS (
   SELECT d, x, lag(x) OVER (ORDER BY d) AS xp FROM daily
 ),
@@ -569,16 +558,7 @@ def finance_var_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-sized stage; ranking and tail algebra run on the day-grain
     frame (~2.4k rows at any corpus size — the Sharpe/theilsen
     discipline)."""
-    li = _t(spark, sf_dir, "lineitem")
-    daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
-        F.sum(
-            F.round(
-                F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100.0
-            ).cast("bigint")
-        )
-        .cast("bigint")
-        .alias("x")
-    )
+    daily = _daily_revenue(spark, sf_dir)
     w = Window.orderBy("d")
     led = daily.select("d", "x", F.lag("x").over(w).alias("xp"))
     r = led.filter(F.col("xp").isNotNull()).select(
@@ -814,12 +794,7 @@ def _sql_macd() -> str:
         "AS DOUBLE) / 1000000000.0"
     )
     return f"""
-WITH daily AS (
-  SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0)
-                       AS BIGINT)) AS BIGINT) AS x
-  FROM lineitem GROUP BY 1
-),
+WITH daily AS ({_SQL_DAILY_REVENUE}),
 win AS (
   SELECT d, x,
          list(x) OVER (ORDER BY d
@@ -867,18 +842,7 @@ def finance_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     w_macd, w_sig = _macd_weights()
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_shipdate", "l_extendedprice", "l_discount"
-    )
-    daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
-        F.sum(
-            F.round(
-                F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100.0
-            ).cast("bigint")
-        )
-        .cast("bigint")
-        .alias("x")
-    )
+    daily = _daily_revenue(spark, sf_dir)
     w = Window.orderBy("d").rowsBetween(-(_MACD_LX - 1), 0)
     win = daily.select("d", "x", F.collect_list("x").over(w).alias("arr"))
 

@@ -11,7 +11,17 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from .catalog import SQL_DAVG, SQL_DSUM, demo_guard, register, _t
+from .catalog import (
+    SQL_DAVG,
+    SQL_DSUM,
+    _SQL_DAILY_REVENUE,
+    _SQL_REVENUE_CENTS,
+    _daily_revenue,
+    _revenue_cents,
+    demo_guard,
+    register,
+    _t,
+)
 from .datapipe import text as tx
 from .functions import davg, dsum
 from .datapipe.sketches import (
@@ -5438,12 +5448,7 @@ def stats_bayes_beta_binomial(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_runs_test() -> str:
     phi = _PHI.format(z="abs(z)")
     return f"""
-WITH daily AS (
-  SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0)
-                       AS BIGINT)) AS BIGINT) AS x
-  FROM lineitem GROUP BY 1
-),
+WITH daily AS ({_SQL_DAILY_REVENUE}),
 led AS (
   SELECT d, x, lag(x) OVER (ORDER BY d) AS xp FROM daily
 ),
@@ -5503,16 +5508,7 @@ def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one map-side-combined daily aggregate; both lag
     windows and the 1-row reduce run on the day-grain frame (the
     Sharpe/VaR discipline)."""
-    li = _t(spark, sf_dir, "lineitem")
-    daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
-        F.sum(
-            F.round(
-                F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100.0
-            ).cast("bigint")
-        )
-        .cast("bigint")
-        .alias("x")
-    )
+    daily = _daily_revenue(spark, sf_dir)
     w = Window.orderBy("d")
     led = daily.select("d", "x", F.lag("x").over(w).alias("xp"))
     s = led.filter(F.col("xp").isNotNull() & (F.col("x") != F.col("xp"))).select(
@@ -6111,9 +6107,8 @@ def _sql_anderson_darling() -> str:
     return f"""
 WITH daily AS (
   SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(round(ln(CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount)
-                                           * 100.0) AS BIGINT)) AS DOUBLE))
-                    * 1e9) AS BIGINT) AS v
+         CAST(round(ln(CAST(sum({_SQL_REVENUE_CENTS}) AS DOUBLE)) * 1e9)
+              AS BIGINT) AS v
   FROM lineitem GROUP BY 1
 ),
 m AS (
@@ -6176,18 +6171,7 @@ def stats_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_shipdate", "l_extendedprice", "l_discount"
     )
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
-        F.round(
-            F.ln(
-                F.sum(
-                    F.round(
-                        F.col("l_extendedprice")
-                        * (F.lit(1.0) - F.col("l_discount"))
-                        * 100.0
-                    ).cast("bigint")
-                ).cast("double")
-            )
-            * 1e9
-        )
+        F.round(F.ln(F.sum(_revenue_cents()).cast("double")) * 1e9)
         .cast("bigint")
         .alias("v")
     )
@@ -6234,13 +6218,8 @@ def stats_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_grubbs() -> str:
-    return """
-WITH daily AS (
-  SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0)
-                       AS BIGINT)) AS BIGINT) AS x
-  FROM lineitem GROUP BY 1
-),
+    return f"""
+WITH daily AS ({_SQL_DAILY_REVENUE}),
 s AS (
   SELECT CAST(count(*) AS BIGINT) AS n,
          CAST(sum(CAST(x AS HUGEINT)) AS DOUBLE) AS sx,
@@ -6280,18 +6259,7 @@ def stats_grubbs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one map-side-combined day groupBy (the frame is
     days-sized forever after), a 1-row moment broadcast back onto it
     (scalar idiom), and a TakeOrdered(1). No window anywhere."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_shipdate", "l_extendedprice", "l_discount"
-    )
-    daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
-        F.sum(
-            F.round(
-                F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100.0
-            ).cast("bigint")
-        )
-        .cast("bigint")
-        .alias("x")
-    )
+    daily = _daily_revenue(spark, sf_dir)
     xd = F.col("x").cast("decimal(38,0)")
     s = daily.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -6324,11 +6292,10 @@ def stats_grubbs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_kendall_tau() -> str:
-    return """
+    return f"""
 WITH daily AS (
   SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0)
-                       AS BIGINT)) AS BIGINT) AS x,
+         CAST(sum({_SQL_REVENUE_CENTS}) AS BIGINT) AS x,
          CAST(count(DISTINCT l_orderkey) AS BIGINT) AS y
   FROM lineitem GROUP BY 1
 ),
@@ -6381,15 +6348,7 @@ def stats_kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         li.groupBy(F.date_trunc("day", "l_shipdate").alias("d"))
         .agg(
-            F.sum(
-                F.round(
-                    F.col("l_extendedprice")
-                    * (F.lit(1.0) - F.col("l_discount"))
-                    * 100.0
-                ).cast("bigint")
-            )
-            .cast("bigint")
-            .alias("x"),
+            F.sum(_revenue_cents()).cast("bigint").alias("x"),
             F.count_distinct(F.col("l_orderkey")).cast("bigint").alias("y"),
         )
         .localCheckpoint(eager=True)  # feeds pairs, ties, and the count
@@ -6772,8 +6731,7 @@ def _sql_cooks_distance() -> str:
     return f"""
 WITH daily AS (
   SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0)
-                       AS BIGINT)) AS BIGINT) AS y
+         CAST(sum({_SQL_REVENUE_CENTS}) AS BIGINT) AS y
   FROM lineitem GROUP BY 1
 ),
 xi AS (
@@ -6843,13 +6801,7 @@ def stats_cooks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_shipdate", "l_extendedprice", "l_discount"
     )
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
-        F.sum(
-            F.round(
-                F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100.0
-            ).cast("bigint")
-        )
-        .cast("bigint")
-        .alias("y")
+        F.sum(_revenue_cents()).cast("bigint").alias("y")
     )
     xi = daily.select(
         "d", "y", F.row_number().over(Window.orderBy("d")).cast("bigint").alias("x")
@@ -7083,13 +7035,8 @@ def stats_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _ESD_K = 5
 def _sql_esd() -> str:
-    base = """
-WITH daily AS (
-  SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0)
-                       AS BIGINT)) AS BIGINT) AS x
-  FROM lineitem GROUP BY 1
-)"""
+    base = f"""
+WITH daily AS ({_SQL_DAILY_REVENUE})"""
     ctes = [base]
     prev_excl = ""
     for r in range(1, _ESD_K + 1):
@@ -7153,24 +7100,8 @@ def stats_esd_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: the day frame is exact BIGINT cents; moments are exact
     DECIMAL sums; each argmax orders on the RAW studentized deviation
     (then day) before rounding."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_shipdate", "l_extendedprice", "l_discount"
-    )
-    daily = (
-        li.groupBy(F.date_trunc("day", "l_shipdate").alias("d"))
-        .agg(
-            F.sum(
-                F.round(
-                    F.col("l_extendedprice")
-                    * (F.lit(1.0) - F.col("l_discount"))
-                    * 100.0
-                ).cast("bigint")
-            )
-            .cast("bigint")
-            .alias("x")
-        )
-        .localCheckpoint(eager=True)  # base of all five rounds
-    )
+    # base of all five rounds
+    daily = _daily_revenue(spark, sf_dir).localCheckpoint(eager=True)
     picks: list = []
     rem = daily
     for r in range(1, _ESD_K + 1):

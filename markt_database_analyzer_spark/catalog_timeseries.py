@@ -11,7 +11,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from .catalog import SQL_DAVG, SQL_DSUM, register, _t
+from .catalog import (
+    SQL_DAVG,
+    SQL_DSUM,
+    _SQL_DAILY_REVENUE,
+    _SQL_REVENUE_CENTS,
+    _daily_revenue,
+    _revenue_cents,
+    register,
+    _t,
+)
 from .functions import davg, dsum
 from .operators.rolling import centered_rolling_mean
 
@@ -599,8 +608,6 @@ def ts_stl_residual_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_HOLT_ALPHA = 0.5
-_HOLT_BETA = 0.3
 _HOLT_H = 7
 def _sql_holt() -> str:
     # DuckDB 1.0's list_reduce mis-evaluates struct accumulators whose
@@ -1577,12 +1584,7 @@ _MAD_C = 1.4826  # normal-consistency constant
 def _sql_hampel() -> str:
     # lower median of a sorted integer list: element (n+1)//2, 1-indexed
     return f"""
-WITH daily AS (
-  SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0)
-                       AS BIGINT)) AS BIGINT) AS x
-  FROM lineitem GROUP BY 1
-),
+WITH daily AS ({_SQL_DAILY_REVENUE}),
 win AS (
   SELECT d, x,
          list(x) OVER (ORDER BY d
@@ -1635,18 +1637,7 @@ def ts_hampel_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-window sorts."""
     from pyspark.sql import Window
 
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_shipdate", "l_extendedprice", "l_discount"
-    )
-    daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
-        F.sum(
-            F.round(
-                F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100.0
-            ).cast("bigint")
-        )
-        .cast("bigint")
-        .alias("x")
-    )
+    daily = _daily_revenue(spark, sf_dir)
     w = Window.orderBy("d").rowsBetween(-_HAMPEL_HALF, _HAMPEL_HALF)
     arr = F.collect_list("x").over(w)
     win = daily.select("d", "x", arr.alias("arr"))
@@ -1833,13 +1824,8 @@ def events_markov2_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_pettitt() -> str:
-    return """
-WITH daily AS (
-  SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0)
-                       AS BIGINT)) AS BIGINT) AS x
-  FROM lineitem GROUP BY 1
-),
+    return f"""
+WITH daily AS ({_SQL_DAILY_REVENUE}),
 nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM daily),
 mr AS (
   SELECT d,
@@ -1894,22 +1880,7 @@ def ts_pettitt_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: day-grain only after one map-side-combined groupBy;
     the rank/running-sum windows run over the horizon-bounded day
     frame (the ts_autocorrelation precedent)."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_shipdate", "l_extendedprice", "l_discount"
-    )
-    daily = (
-        li.groupBy(F.date_trunc("day", "l_shipdate").alias("d"))
-        .agg(
-            F.sum(
-                F.round(
-                    F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100.0
-                ).cast("bigint")
-            )
-            .cast("bigint")
-            .alias("x")
-        )
-        .localCheckpoint(eager=True)
-    )
+    daily = _daily_revenue(spark, sf_dir).localCheckpoint(eager=True)
     from pyspark.sql import Window
 
     nn = daily.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
@@ -2041,11 +2012,10 @@ def events_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_seasonal_mk() -> str:
-    return """
+    return f"""
 WITH daily AS (
   SELECT date_trunc('day', l_shipdate) AS day, isodow(l_shipdate) AS g,
-         CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0)
-                       AS BIGINT)) AS BIGINT) AS v
+         CAST(sum({_SQL_REVENUE_CENTS}) AS BIGINT) AS v
   FROM lineitem GROUP BY 1, 2
 ),
 pairs AS (
@@ -2111,13 +2081,7 @@ def ts_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.dayofweek("l_shipdate").alias("g"),  # grouping key only; any
         # fixed weekday numbering partitions the days identically
     ).agg(
-        F.sum(
-            F.round(
-                F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100.0
-            ).cast("bigint")
-        )
-        .cast("bigint")
-        .alias("v")
+        F.sum(_revenue_cents()).cast("bigint").alias("v")
     ).localCheckpoint(eager=True)  # feeds pairs AND ties
     a = daily.alias("a")
     b = daily.alias("b")

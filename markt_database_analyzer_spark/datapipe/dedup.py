@@ -81,36 +81,11 @@ def exact_dedup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 # MinHash + LSH
 # --------------------------------------------------------------------------
 
-def minhash_signature(sh: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature (array<bigint> of length num_hashes) computed
-    entirely row-local: min over the shingle set of k seeded hashes.
-
-    Expression form: one seeded md5 per (shingle, hash) — k md5 calls per
-    shingle. The hot path is the Kirsch-Mitzenmacher family in
-    :func:`minhash_signatures_km` (one md5 per shingle, k derived
-    cheaply); this form is kept for callers that need k genuinely
-    independent md5 families."""
-    def seeded(i: int):
-        return lambda s: hash60(s, seed=i)
-
-    sigs = [F.array_min(F.transform(sh, seeded(i))) for i in range(num_hashes)]
-    return F.array(*sigs)
-
-
-def km_hash_arrays(sh: Column) -> tuple[Column, Column]:
-    """The two base 56-bit hash arrays of the Kirsch-Mitzenmacher family:
-    h1 = first 14 hex digits of md5, h2 = next 14. Derived members are
-    ``h1 + i*h2`` (max 2^56 + 15·2^56 = 2^60 — no int64 overflow in any
-    engine). K-M is the standard construction for deriving k hash
-    functions from two with no loss for LSH-style sketches."""
-    digests = F.transform(sh, lambda s: F.md5(s))
-    h1 = F.transform(digests, lambda d: F.conv(F.substring(d, 1, 14), 16, 10).cast("bigint"))
-    h2 = F.transform(digests, lambda d: F.conv(F.substring(d, 15, 14), 16, 10).cast("bigint"))
-    return h1, h2
-
-
 def sql_km_hash(expr: str, i: int) -> str:
-    """DuckDB rendering of the i-th K-M family member of a string expr."""
+    """DuckDB rendering of the i-th Kirsch-Mitzenmacher family member of
+    a string expr: ``h1 + i*h2``, where h1 and h2 are the first and next
+    14 hex digits of md5 (at most 2^60 for i < 16, so no int64 overflow
+    in either engine)."""
     h1 = f"(('0x' || substring(md5({expr}), 1, 14))::BIGINT)"
     h2 = f"(('0x' || substring(md5({expr}), 15, 14))::BIGINT)"
     return f"({h1} + {i} * {h2})"
@@ -470,7 +445,6 @@ def contamination_pairs(
     text_col: str,
     id_col: str,
     shingle_k: int = 5,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """(eval_id, train_id, n_shared) for every eval document sharing at
     least one k-shingle with a train document — the decontamination sweep
@@ -480,15 +454,13 @@ def contamination_pairs(
     — the distinct is free (shingle sets are already deduped per doc) and
     hashing means the join key is an 8-byte int, never shingle text.
     An eval holdout is a fixed-size benchmark set, orders of magnitude
-    smaller than train, so by default its (eval_id, sh_h) pairs BROADCAST
-    and the train shingles — the 100 TB side — are never shuffled at all:
-    the join is map-side against the eval hash table, and the only
-    exchange left is the group-by on matched pairs, bounded by true
-    overlap. Set ``broadcast_eval=False`` for the symmetric shuffle join
-    when the 'eval' side is itself corpus-sized (a corpus×corpus overlap
-    audit rather than a holdout sweep). Join fan-out is bounded either
-    way: a shingle in t train docs and e eval docs emits t·e rows for
-    THAT shingle only, and the group-by collapses them map-side.
+    smaller than train, so its (eval_id, sh_h) pairs BROADCAST and the
+    train shingles — the 100 TB side — are never shuffled at all: the
+    join is map-side against the eval hash table, and the only exchange
+    left is the group-by on matched pairs, bounded by true overlap. Join
+    fan-out is bounded: a shingle in t train docs and e eval docs emits
+    t·e rows for THAT shingle only, and the group-by collapses them
+    map-side.
     Empty/short-document sentinel shingles are dropped so blank docs
     don't cross-match."""
     def side(df: DataFrame, alias: str) -> DataFrame:
@@ -501,7 +473,7 @@ def contamination_pairs(
 
     ev = side(eval_df, "eval_id")
     tr = side(train, "train_id")
-    joined = tr.join(F.broadcast(ev) if broadcast_eval else ev, "sh_h")
+    joined = tr.join(F.broadcast(ev), "sh_h")
     return (
         joined.groupBy("eval_id", "train_id")
         .agg(F.count(F.lit(1)).alias("n_shared"))

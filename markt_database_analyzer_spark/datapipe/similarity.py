@@ -205,26 +205,6 @@ def embedding_neardup_pairs(
     )
 
 
-def assign_cells(corpus: DataFrame, cents: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """Assign each vector to its nearest centroid (argmin squared L2,
-    deterministic cell-id tiebreak). ``cents`` is (cell, centroid) and is
-    broadcast — the corpus never shuffles."""
-    sq = F.aggregate(
-        F.zip_with(F.col(vec_col).cast("array<double>"), F.col("centroid"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    w = Window.partitionBy(id_col).orderBy("dist", "cell")
-    return (
-        fan_out(corpus)
-        .crossJoin(F.broadcast(cents))
-        .withColumn("dist", sq)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("dist", "_rn", "centroid")
-    )
-
-
 def assign_cells_local(
     corpus: DataFrame,
     cents: list[tuple[int, list[float]]],
@@ -239,9 +219,9 @@ def assign_cells_local(
     Lloyd assignment pass is map-only, which is the property that makes
     the iteration count affordable at any corpus size.
 
-    Tie-break parity with :func:`assign_cells` (min dist, then min cell):
-    centroids are laid out in ascending cell order and ``array_position``
-    returns the first occurrence of the min.
+    Ties go to the lower cell (min dist, then min cell): centroids are
+    laid out in ascending cell order and ``array_position`` returns the
+    first occurrence of the min.
 
     The whole argmin is rendered as ONE SQL expression string: k·dims
     double literals via ``F.lit`` would be k·dims py4j round trips of

@@ -51,10 +51,7 @@ def cms_cells(df: DataFrame, key: Column, depth: int, width: int) -> DataFrame:
         F.explode(
             F.array(
                 *[
-                    F.struct(
-                        F.lit(r).alias("d"),
-                        (hash60(key, seed=r) % F.lit(width)).alias("b"),
-                    )
+                    F.struct(F.lit(r).alias("d"), cms_bucket(key, r, width))
                     for r in range(depth)
                 ]
             )
@@ -77,10 +74,7 @@ def cms_estimate(
         F.explode(
             F.array(
                 *[
-                    F.struct(
-                        F.lit(r).alias("d"),
-                        (hash60(key, seed=r) % F.lit(width)).alias("b"),
-                    )
+                    F.struct(F.lit(r).alias("d"), cms_bucket(key, r, width))
                     for r in range(depth)
                 ]
             )

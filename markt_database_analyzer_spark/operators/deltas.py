@@ -1,8 +1,8 @@
 """Partitioned lag-differences (SURVEY.md §2.6 W1).
 
 ``groupby(key)[cols].diff()`` (analyse.py:69-70) → window ``lag`` per key.
-First row of each partition gets null deltas (pandas NaN) and is dropped by
-the caller, matching analyse.py:71.
+First row of each partition gets null deltas (pandas NaN) and is dropped,
+matching analyse.py:71.
 
 Scale shape: one shuffle on the partition keys, then a per-partition sort.
 If the source is already bucketed/sorted by the key (our recommended at-rest
@@ -20,11 +20,11 @@ def lag_deltas(
     partition_keys: list[str],
     order: list[Column | str],
     cols: dict[str, Column | str],
-    drop_first_row: bool = True,
 ) -> DataFrame:
     """Add ``delta_<name>`` = col - lag(col) per partition for each entry in
-    ``cols`` ({output_suffix: source_col}). Ordering should be total (pass
-    tiebreak columns) for run-to-run determinism."""
+    ``cols`` ({output_suffix: source_col}) and drop each partition's first
+    row. Ordering should be total (pass tiebreak columns) for run-to-run
+    determinism."""
     w = Window.partitionBy(*partition_keys).orderBy(*order)
     out = df
     delta_names = []
@@ -33,6 +33,4 @@ def lag_deltas(
         dname = f"delta_{name}"
         out = out.withColumn(dname, c - F.lag(c).over(w))
         delta_names.append(dname)
-    if drop_first_row:
-        out = out.na.drop(subset=delta_names)
-    return out
+    return out.na.drop(subset=delta_names)

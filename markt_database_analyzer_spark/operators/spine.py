@@ -2,9 +2,9 @@
 
 The reference guarantees a complete axis (all 24 hours / all 144 or 288
 bins) via ``reindex(fill_value=0)`` (analyse.py:224,295) and categorical
-``groupby(observed=False)`` (analyse.py:86). Spark shape: generate the spine
-with ``spark.range`` (no data shuffle — it's a local scan) and LEFT join the
-aggregate onto it.
+``groupby(observed=False)`` (analyse.py:86). Spark shape: the caller
+generates the spine with ``spark.range`` (no data shuffle — it's a local
+scan) and ``join_spine`` LEFT joins the aggregate onto it.
 
 Two fill flavors, both needed (SURVEY.md §7 "what's hard" #4):
 - counts → ``coalesce(n, 0)``  (reindex fill_value=0)
@@ -14,23 +14,8 @@ Two fill flavors, both needed (SURVEY.md §7 "what's hard" #4):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def numeric_spine(
-    spark: SparkSession,
-    n: int,
-    col: str,
-    scale: float = 1.0,
-    offset: float = 0.0,
-    as_type: str = "double",
-) -> DataFrame:
-    """Spine of ``n`` values: offset, offset+scale, ... (e.g. bin centers:
-    scale=5, offset=2.5; hours: scale=1, offset=0)."""
-    return spark.range(n).select(
-        ((F.col("id").cast("double") * F.lit(scale)) + F.lit(offset)).cast(as_type).alias(col)
-    )
 
 
 def join_spine(

@@ -1,12 +1,9 @@
 from .readers import (  # noqa: F401
     MONITOR_RECORDS_SCHEMA,
     PROFILES_SCHEMA,
-    TESTDATA_TABLES,
-    load_tables,
     read_csv,
     read_jsonl,
     read_table,
-    register_views,
 )
 from .sinks import write_bucketed, write_partitioned  # noqa: F401
 from . import plots  # noqa: F401

@@ -33,18 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+from ..session import ENGINE_CONF
 
 # Reference-shaped schemas (SURVEY.md §1.3). Dirty columns arrive as strings
 # (SQLite is dynamically typed); cleaning casts them with try_* downstream.
@@ -72,39 +61,18 @@ PROFILES_SCHEMA = T.StructType(
 
 
 def ensure_engine_conf(spark: SparkSession) -> None:
-    """Set the two runtime confs the engine's semantics depend on, so
-    every entry point works on ANY caller-provided SparkSession (the
-    driver contract hands us one we didn't build):
-
-    - ``nanosAsLong``: TIMESTAMP(NANOS) parquet (the events table in some
-      testdata generations) is unreadable in Spark 4 without it — reads
-      throw PARQUET_TYPE_ILLEGAL;
-    - ``inferTimestampNTZ`` off: isAdjustedToUTC=false MICROS columns
-      (the current testdata generation) otherwise arrive as
-      TIMESTAMP_NTZ, which ``unix_micros`` and window/watermark APIs
-      reject — read them as plain TIMESTAMP instead (micros unchanged
-      under the UTC session timezone);
-    - UTC session timezone: hour/day extractions and timestamp collection
-      must agree with the UTC-naive at-rest data and external oracles.
-    """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # InferFiltersFromGenerate rewrites explode(e) into Filter(size(e)>0)
-    # + explode(e) and pushes the filter to the scan. Every exploded array
-    # in this engine is expression-COMPUTED (shingles, hashes, window
-    # minima — never a stored column), so the inferred filter re-evaluates
-    # the whole generator expression once per input row with no pruning
-    # benefit; for winnowing it re-inlined the O(tokens·windows) md5 tree
-    # the staged projection exists to avoid (measured: 26 s → 0.6 s at
-    # sf0.1 with the rule excluded). Correctness is unaffected — explode
-    # of an empty array emits nothing either way.
-    rule = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
-    current = spark.conf.get("spark.sql.optimizer.excludedRules", None)
-    if not current:
-        spark.conf.set("spark.sql.optimizer.excludedRules", rule)
-    elif rule not in current:
-        spark.conf.set("spark.sql.optimizer.excludedRules", f"{current},{rule}")
+    """Set ``session.ENGINE_CONF`` on ``spark``, so every entry point works
+    on ANY caller-provided SparkSession (the driver contract hands us one
+    we didn't build). The excluded optimizer rule is appended to any rules
+    the session already excludes."""
+    for key, value in ENGINE_CONF.items():
+        if key == "spark.sql.optimizer.excludedRules":
+            current = spark.conf.get(key, None)
+            if current and value in current:
+                continue
+            if current:
+                value = f"{current},{value}"
+        spark.conf.set(key, value)
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -129,18 +97,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif field.dataType.typeName() == "timestamp_ntz":
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
     return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES
-) -> dict[str, DataFrame]:
-    return {name: read_table(spark, sf_dir, name) for name in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for the SQL API."""
-    for name in TESTDATA_TABLES:
-        read_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def read_sqlite(

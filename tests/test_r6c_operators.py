@@ -7,20 +7,11 @@ from __future__ import annotations
 
 import math
 from collections import Counter, defaultdict
-from decimal import ROUND_HALF_UP, Decimal
 
 from markt_database_analyzer_spark.catalog import REGISTRY
+from .replay import _q_half_up, _round_half_up
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _round_half_up(x: float, dp: int) -> float:
-    return float(Decimal(repr(x)).quantize(Decimal(f"1e-{dp}"), ROUND_HALF_UP))
-
-
-def _q_half_up(x: float) -> int:
-    """CAST(round(x) AS BIGINT) with Spark/DuckDB HALF_UP semantics."""
-    return int(Decimal(repr(x)).quantize(Decimal("1"), ROUND_HALF_UP))
 
 
 def test_kruskal_wallis_matches_python_rank_replay(spark):

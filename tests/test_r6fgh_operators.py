@@ -5,24 +5,15 @@ integer-grid conventions the engines use."""
 
 from __future__ import annotations
 
-import hashlib
 import math
 from collections import defaultdict
-from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 
 from markt_database_analyzer_spark.catalog import REGISTRY
+from .replay import _h60, _q_half_up
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _q_half_up(x: float) -> int:
-    return int(Decimal(repr(x)).quantize(Decimal("1"), ROUND_HALF_UP))
-
-
-def _h60(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
 
 
 def test_cuped_matches_python_replay(spark):

@@ -5,25 +5,16 @@ integer-grid conventions the engines use."""
 
 from __future__ import annotations
 
-import hashlib
 import math
 import re
 from collections import Counter, defaultdict
-from decimal import ROUND_HALF_UP, Decimal
 
 from markt_database_analyzer_spark.catalog import REGISTRY
 from markt_database_analyzer_spark.catalog_stats import _PB_B, _PB_SEED, _PB_THRESH
 from markt_database_analyzer_spark.datapipe.sampling import RESOLUTION
+from .replay import _h60, _q_half_up
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _q_half_up(x: float) -> int:
-    return int(Decimal(repr(x)).quantize(Decimal("1"), ROUND_HALF_UP))
-
-
-def _h60(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
 
 
 def test_gini_matches_python_rank_replay(spark):

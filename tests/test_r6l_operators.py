@@ -6,17 +6,13 @@ from __future__ import annotations
 
 import math
 from collections import Counter
-from decimal import ROUND_HALF_UP, Decimal
 
 from markt_database_analyzer_spark.catalog import REGISTRY
 from markt_database_analyzer_spark.catalog_eval import _RBO_DEPTH, _RBO_P, _RBO_WEIGHTS
 from markt_database_analyzer_spark.catalog_text import _OOV_K
+from .replay import _q_half_up
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _q_half_up(x: float) -> int:
-    return int(Decimal(repr(x)).quantize(Decimal("1"), ROUND_HALF_UP))
 
 
 def _toks(text: str) -> list[str]:

@@ -6,17 +6,13 @@ from __future__ import annotations
 
 import datetime as dt
 from collections import defaultdict
-from decimal import ROUND_HALF_UP, Decimal
 
 from markt_database_analyzer_spark.catalog import REGISTRY
 from markt_database_analyzer_spark.catalog_sampling import _ZM_PREDICATES, _ZM_ZONES
 from markt_database_analyzer_spark.catalog_timeseries import _LTOB_BUCKET_DAYS
+from .replay import _q_half_up
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _q_half_up(x: float) -> int:
-    return int(Decimal(repr(x)).quantize(Decimal("1"), ROUND_HALF_UP))
 
 
 def test_zone_map_pruning_matches_python_replay(spark):

@@ -4,29 +4,16 @@ HALF_UP / integer-grid conventions the engines use."""
 
 from __future__ import annotations
 
-import hashlib
 import math
 from collections import defaultdict
-from decimal import ROUND_HALF_UP, Decimal
 
 from markt_database_analyzer_spark.catalog import REGISTRY
 from markt_database_analyzer_spark.catalog_stats import _MDE_REL_TARGET, _POWER_SEED, _Z_ALPHA, _Z_BETA
 from markt_database_analyzer_spark.catalog_text import _NOV_EVAL_FRACTION, _NOV_SEED
 from markt_database_analyzer_spark.datapipe.sampling import RESOLUTION
+from .replay import _h60, _phi, _q_half_up
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _q_half_up(x: float) -> int:
-    return int(Decimal(repr(x)).quantize(Decimal("1"), ROUND_HALF_UP))
-
-
-def _h60(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-
-def _phi(z: float) -> float:
-    return 1.0 / (1.0 + math.exp(-1.5976 * z - 0.07056 * z * z * z))
 
 
 def test_power_mde_matches_python_replay(spark):

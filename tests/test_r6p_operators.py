@@ -7,17 +7,13 @@ from __future__ import annotations
 
 import math
 from collections import Counter, defaultdict
-from decimal import ROUND_HALF_UP, Decimal
 
 from markt_database_analyzer_spark.catalog import REGISTRY
 from markt_database_analyzer_spark.catalog_privacy import _KANON_BAND, _KANON_K
 from markt_database_analyzer_spark.catalog_text import _SNIP_DOCS, _SNIP_WINDOW
+from .replay import _q_half_up
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _q_half_up(x: float) -> int:
-    return int(Decimal(repr(x)).quantize(Decimal("1"), ROUND_HALF_UP))
 
 
 def test_k_anonymity_matches_python_class_replay(spark):

@@ -6,17 +6,13 @@ from __future__ import annotations
 
 import math
 from collections import defaultdict
-from decimal import ROUND_HALF_UP, Decimal
 
 from markt_database_analyzer_spark.catalog import REGISTRY
 from markt_database_analyzer_spark.catalog_datapipe import _LSHR_SAMPLE, _LSHR_THRESHOLD
 from markt_database_analyzer_spark.catalog_finance import _VAR_ALPHA
+from .replay import _q_half_up
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _q_half_up(x: float) -> int:
-    return int(Decimal(repr(x)).quantize(Decimal("1"), ROUND_HALF_UP))
 
 
 def test_var_cvar_matches_python_order_statistic_replay(spark):

@@ -3,7 +3,6 @@ pinned against plain-Python recomputation at sf0.001."""
 
 from __future__ import annotations
 
-import hashlib
 import math
 from collections import defaultdict
 
@@ -11,12 +10,9 @@ from markt_database_analyzer_spark.catalog import REGISTRY
 from markt_database_analyzer_spark.catalog_engine import _ASOF_TOL_US
 from markt_database_analyzer_spark.catalog_privacy import _UNIF_SEED
 from markt_database_analyzer_spark.datapipe.sampling import RESOLUTION
+from .replay import _h60
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _h60(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
 
 
 def test_asof_nearest_matches_python_replay(spark):

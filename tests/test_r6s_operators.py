@@ -3,27 +3,14 @@ heatmap), pinned against plain-Python recomputation at sf0.001."""
 
 from __future__ import annotations
 
-import hashlib
 import math
 from collections import Counter, defaultdict
-from decimal import ROUND_HALF_UP, Decimal
 
 from markt_database_analyzer_spark.catalog import REGISTRY
 from markt_database_analyzer_spark.catalog_stats import _BB_SEED
+from .replay import _h60, _phi, _q_half_up
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _q_half_up(x: float) -> int:
-    return int(Decimal(repr(x)).quantize(Decimal("1"), ROUND_HALF_UP))
-
-
-def _h60(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-
-def _phi(z: float) -> float:
-    return 1.0 / (1.0 + math.exp(-1.5976 * z - 0.07056 * z * z * z))
 
 
 def test_beta_binomial_matches_python_posterior_replay(spark):

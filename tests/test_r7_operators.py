@@ -5,19 +5,11 @@ from __future__ import annotations
 
 import math
 from collections import defaultdict
-from decimal import ROUND_HALF_UP, Decimal
 
 from markt_database_analyzer_spark.catalog import REGISTRY
+from .replay import _phi, _q_half_up
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _q_half_up(x: float) -> int:
-    return int(Decimal(repr(x)).quantize(Decimal("1"), ROUND_HALF_UP))
-
-
-def _phi(z: float) -> float:
-    return 1.0 / (1.0 + math.exp(-1.5976 * z - 0.07056 * z * z * z))
 
 
 def _daily_revenue_cents(spark):
